@@ -483,3 +483,59 @@ class TestShardedSink:
             tb = pq.read_table(files[0], columns=["tok_before"])
             vals = tb.column("tok_before").to_pylist()
             assert vals == sorted(vals)
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _display_page(pipe, sink):
+    return pipe.display_text(
+        sink.orderBy("source_rank", "line_no").limit(100)
+    ).select("doc_id", "tokens", "text")
+
+
+def test_display_page_reads_stored_text(spark, fixture_dir, tmp_path):
+    """A sink that stores text serves the display page as one JVM
+    TakeOrderedAndProject, with text equal to detokenizing the tokens; a
+    sink without text, and a vocab whose \\r the detokenizer scrubs, still
+    detokenize."""
+    vocab = build_vocab()
+    words = vocab + ["<unk>"]
+    info = spark.read.parquet(f"{fixture_dir}/source_info.parquet")
+
+    def sink_page(voc, name, **run_kw):
+        pipe = LogPipeline(spark, default_workspace(), voc, source_info=info)
+        seqs = pipe.load_sequences(f"{fixture_dir}/sequences")
+        pipe.write_sinks(pipe.run(seqs, **run_kw), str(tmp_path / name))
+        return _display_page(pipe, spark.read.parquet(str(tmp_path / name / "routed")))
+
+    stored = sink_page(vocab, "text")
+    plan = _executed_plan(stored)
+    assert "TakeOrderedAndProject" in plan, plan
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    rows = stored.collect()
+    assert len(rows) == 100
+    for r in rows:
+        assert r["text"] == " ".join(
+            words[t] if 0 <= t < len(vocab) else words[-1] for t in r["tokens"]
+        ), r["doc_id"]
+
+    slim = sink_page(vocab, "slim", with_text=False)
+    assert "ArrowEvalPython" in _executed_plan(slim)
+    assert slim.collect() == rows
+
+    cr_vocab = [w + "\r" for w in vocab]
+    cr = sink_page(cr_vocab, "cr")
+    assert "ArrowEvalPython" in _executed_plan(cr)
+    cr_rows = cr.collect()
+    assert [r["doc_id"] for r in cr_rows] == [r["doc_id"] for r in rows]
+    cr_words = cr_vocab + ["<unk>"]
+    for r in cr_rows:
+        joined = " ".join(
+            cr_words[t] if 0 <= t < len(cr_vocab) else cr_words[-1]
+            for t in r["tokens"]
+        )
+        # the reference line scrub (OutputData.cpp:78-90)
+        scrubbed = joined.replace("\r\n", "\n").rstrip("\r").replace("\r", " ")
+        assert r["text"] == scrubbed, r["doc_id"]

@@ -153,6 +153,68 @@ def test_empty_ids_reference_shapes():
     assert fs == [(0, 0, -1, -1, -1, -1)]
 
 
+# a row: (token ids, null?) — a null row keeps its ids in the child
+# values, so its offsets span them; ids run past both ends of the vocab
+_ARROW_ROW = st.tuples(
+    st.lists(st.integers(-3, len(VOCAB) + 2), max_size=12), st.booleans()
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    rows=st.lists(_ARROW_ROW, max_size=14),
+    cut=st.tuples(st.integers(0, 4), st.integers(0, 4)),
+    ws_idx=st.integers(0, len(WORKSPACES) - 1),
+    include_search=st.booleans(),
+    include_text=st.booleans(),
+)
+def test_arrow_mapper_property(rows, cut, ws_idx, include_search, include_text):
+    """The whole-batch mapInArrow kernel == spans_for_ids row by row, and
+    its text == the " ".join, over empty rows, null rows whose offsets
+    span values, out-of-vocab ids and sliced batches (first offset not 0,
+    `.values` not sliced)."""
+    import pyarrow as pa
+
+    from txtlogparser_spark.functions.arrow_spans import make_arrow_span_mapper
+
+    filters, searches = WORKSPACES[ws_idx]
+    lens = [len(ids) for ids, _ in rows]
+    full = pa.ListArray.from_arrays(
+        pa.array(np.concatenate(([0], np.cumsum(lens, dtype=np.int64))), pa.int32()),
+        pa.array([t for ids, _ in rows for t in ids], pa.int32()),
+        mask=pa.array([null for _, null in rows], pa.bool_()),
+    )
+    lo = min(cut[0], len(rows))
+    tokens = full.slice(lo, max(len(rows) - lo - cut[1], 0))
+    fn, fields = make_arrow_span_mapper(
+        VOCAB, filters, searches,
+        include_search=include_search, include_text=include_text,
+    )
+    batch = pa.RecordBatch.from_arrays([tokens], names=["tokens"])
+    (out,) = list(fn(iter([batch])))
+    assert out.schema.names == ["tokens"] + [f.name for f in fields]
+    got = out.to_pydict()
+
+    tables = build_word_tables(
+        VOCAB, filters, searches, want_search=include_search, want_combined=False
+    )
+    words = VOCAB + ["<unk>"]
+    for i, (ids, null) in enumerate(rows[lo:lo + len(tokens)]):
+        ids = [] if null else [t if 0 <= t < len(VOCAB) else len(VOCAB) for t in ids]
+        fs, ss, _ = spans_for_ids(
+            np.asarray(ids, dtype=np.int64), *tables,
+            want_search=include_search, want_combined=False,
+        )
+        kinds = [("f", fs, 2, 3)] + ([("s", ss, 4, 5)] if include_search else [])
+        for k, spans, id_slot, row_slot in kinds:
+            flat = list(zip(*(got[f"{k}_{x}"][i] for x in ("start", "end", "id", "row"))))
+            assert flat == [
+                (sp[0], sp[1], sp[id_slot], sp[row_slot]) for sp in spans
+            ], (k, i, ids)
+        if include_text:
+            assert got["text"][i] == " ".join(words[t] for t in ids)
+
+
 def test_word_locality_gate():
     ok = [
         ("ERROR", False),

@@ -20,7 +20,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 AUDITED = [
     "log_route",
@@ -210,7 +211,7 @@ def main():
         "enrich join, and flat-column sink so metrics reads prune to one",
         "int-list column — see BENCH/BASELINE.md for measured throughput.",
     ]
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "BENCH", "PLANS.md")
+    out = os.path.join(ROOT, "BENCH", "PLANS.md")
     # preserve the spill-audit block (tools/spill_audit.py owns it) —
     # this tool rewrites everything else
     spill_block = ""

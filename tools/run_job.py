@@ -1,8 +1,8 @@
 """spark-submit entry point for the log pipeline (north_star launch mode).
 
-Launch (multi-executor layout; local[N] in this sandbox):
+Launch from the repository root (multi-executor layout, or local[N]):
 
-    cd /root/repo && zip -qr /tmp/tlp.zip txtlogparser_spark
+    zip -qr /tmp/tlp.zip txtlogparser_spark
     spark-submit --master 'local[8]' --py-files /tmp/tlp.zip \
         tools/run_job.py --data .bench_data/seq_2000000 --out /tmp/run_out
 

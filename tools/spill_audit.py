@@ -26,7 +26,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 MARK_BEGIN = "<!-- SPILL_AUDIT_BEGIN -->"
 MARK_END = "<!-- SPILL_AUDIT_END -->"
@@ -133,7 +134,7 @@ def main() -> None:
     results: list[dict] = []
 
     # ---- end-to-end pipeline at the core-scaling row count ----
-    seq_dir = os.path.join("/root/repo/.bench_data", f"seq_{args.rows}")
+    seq_dir = os.path.join(ROOT, ".bench_data", f"seq_{args.rows}")
     if os.path.isdir(seq_dir):
         from txtlogparser_spark.plans.pipeline import LogPipeline
         from txtlogparser_spark.sources.fixtures import (
@@ -215,7 +216,7 @@ def main() -> None:
         MARK_END,
     ]
 
-    plans = "/root/repo/BENCH/PLANS.md"
+    plans = os.path.join(ROOT, "BENCH", "PLANS.md")
     with open(plans) as fh:
         txt = fh.read()
     block = "\n".join(lines)

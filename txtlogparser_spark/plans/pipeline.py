@@ -5,24 +5,33 @@ Catalyst fuses the whole run into one optimized plan per action (the
 reference's pause/resume recompute-coalescing, OutputData.cpp:233-255,
 falls out of lazy evaluation for free).
 
-Stage order & the scale rationale:
+Stage order of the launcher's plan, `run()` (fused, the default):
 
-  scan (source-pruned, column-pruned)          # Iceberg/parquet partition pruning
-    → coarse survival prefilter on tokens?     # no — prefilter needs text:
-    → detokenize (Arrow UDF)                   #   runs after scan pruning
-    → coarse survival prefilter (Catalyst)     # prunes before the span UDF
-    → span UDF (Arrow)                         # exact spans, the one Python stage
+  scan (source-pruned, column-pruned)          # S2 IN predicate pushed down
+    → token survival prefilter (JVM)           # on token ids, before Python
+    → ONE span stage (Arrow, the only Python stage):
+        word-local matchers, python dialect:   mapInArrow word-table kernel
+                                               (functions/arrow_spans.py)
+        otherwise:                             fused detokenize + generic
+                                               text scanner (spans.py)
     → exact survival filter (JVM exists())     # OR-semantics
     → broadcast enrich (source_rank, payload)  # no fact-table shuffle
     → route tag (CASE)                         # single pass, per-sink writes
-    → aggregates (partial+final hash agg)      # only (id, count) shuffles
+  aggregates (partial+final hash agg)          # only (id, count) shuffles
+  display page: top-N by (source_rank, line_no) # one TakeOrderedAndProject
+                                               # when the sink stores text
 
-The detokenize → prefilter order means the string materializes for every
-scanned row; at 10^12 scale the win is that `contains()` prefiltering
-happens BEFORE the (more expensive) span extraction and that dropped rows
-never reach Python. A token-level prefilter (pattern tokens ⊂ row tokens
-via array_contains on known-vocab single-token patterns) is a further
-optimization hook noted in ROADMAP.
+`run(fused=False)` (also the streaming and workspace-session chain) is
+parsed → enriched → routed: detokenize (Arrow UDF) → coarse text
+prefilter (Catalyst) → span UDF → the same survival / enrich / route.
+
+Known divergence, kept deliberately: the detokenizer applies the
+reference's \\r line scrub (OutputData.cpp:78-90), so `parsed()` scrubs the
+text BEFORE spans are computed, while the fused span stage computes spans
+on, and stores, the text as joined, before any scrub. The two paths agree
+whenever no vocab word holds a \\r (every generated fixture). Only the
+display page corrects for it: `display_text` re-detokenizes, scrub
+included, when the vocab holds a \\r.
 """
 
 from __future__ import annotations
@@ -33,7 +42,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from txtlogparser_spark.config import WorkspaceConfig
-from txtlogparser_spark.functions.detokenize import make_detokenizer
+from txtlogparser_spark.functions.detokenize import (
+    has_carriage_return,
+    make_detokenizer,
+)
 from txtlogparser_spark.functions.spans import (
     assemble_spans,
     attach_spans,
@@ -77,6 +89,9 @@ class LogPipeline:
         # 0 = rely on AQE skew handling only
         self.salt_buckets = salt_buckets
         self._detok = make_detokenizer(self.vocab)
+        # stored text equals the detokenizer's output unless its \r
+        # scrub can change it (see the module docstring)
+        self._text_is_detokenized = not has_carriage_return(self.vocab)
 
     # ---- sources ----
     def load_sequences(self, path: str) -> DataFrame:
@@ -192,12 +207,12 @@ class LogPipeline:
 
         When every matcher is word-local (functions/token_spans.py), the
         fused UDF is the vocabulary-precompute variant: per-word span
-        decompositions are computed once per vocab word at plan build and
-        per-row work drops to a numpy gather + assembly over claim-bearing
-        words. `token_tables` forces (True) or disables (False) that path;
-        None = auto-detect. All paths produce identical results
-        (tests/test_pipeline_e2e.py vs the oracle; test_token_spans.py
-        pins token-table == generic)."""
+        decompositions are computed once per vocab word at plan build, and
+        the default mapInArrow kernel (functions/arrow_spans.py) assembles
+        a whole batch in numpy with no per-row Python. `token_tables`
+        forces (True) or disables (False) that path; None = auto-detect.
+        All paths produce identical results (tests/test_pipeline_e2e.py
+        vs the oracle; test_token_spans.py pins token-table == generic)."""
         if not fused:
             return self.routed(
                 self.enriched(self.parsed(seqs)), with_search=with_search
@@ -381,9 +396,18 @@ class LogPipeline:
         return df
 
     def display_text(self, df: DataFrame) -> DataFrame:
-        """Reconstruct `text` from tokens for a (page-sized) slice — the
-        render-on-demand analog of OutputData.cpp:504-524 when the sink
-        was written with with_text=False."""
+        """`text` for a (page-sized) slice — the render-on-demand analog
+        of OutputData.cpp:504-524.
+
+        A frame that already carries `text` (a sink written by `run()`
+        with with_text=True) is returned unchanged when no vocab word
+        holds a \\r: the stored text is then by construction the
+        detokenizer's output, and a sorted page stays one JVM
+        TakeOrderedAndProject with no Python stage. Otherwise — a sink
+        written with with_text=False, or a vocab whose \\r the scrub can
+        change — `text` is rebuilt from `tokens` by the detokenizer."""
+        if "text" in df.columns and self._text_is_detokenized:
+            return df
         return df.withColumn("text", self._detok(F.col("tokens")))
 
     def write_sinks(
