@@ -188,6 +188,49 @@ class TestLoadCompatAndActiveWorkspace:
         (ws,) = load_workspaces(p, invalid_regex="match_nothing")
         assert [s.source for s in ws.sources] == ["x"]
 
+    def test_load_workspaces_logs_dropped_duplicate_sources(
+        self, tmp_path, caplog
+    ):
+        """Under the regex compat mode duplicate sources are dropped
+        keep-first, and every dropped duplicate path is logged; strict
+        loading still rejects them."""
+        import json
+        import logging
+
+        from txtlogparser_spark.config import (
+            ConfigError,
+            FORMAT_VERSION,
+            load_workspaces,
+        )
+        import pytest as _pytest
+
+        doc = {
+            "formatVersion": FORMAT_VERSION,
+            "workspaces": [
+                {
+                    "id": 7,
+                    "sources": [
+                        {"source": "x", "source_rank": 0},
+                        {"source": "y", "source_rank": 1},
+                        {"source": "x", "source_rank": 2},
+                        {"source": "y", "source_rank": 3},
+                    ],
+                }
+            ],
+        }
+        p = str(tmp_path / "store.json")
+        with open(p, "w") as fh:
+            json.dump(doc, fh)
+        with caplog.at_level(logging.WARNING, logger="txtlogparser_spark.config"):
+            (ws,) = load_workspaces(p, invalid_regex="match_nothing")
+        assert [(s.source, s.source_rank) for s in ws.sources] == [("x", 0), ("y", 1)]
+        dropped = [r.getMessage() for r in caplog.records]
+        assert len(dropped) == 2, dropped
+        assert "'x'" in dropped[0] and "source_rank=2" in dropped[0]
+        assert "'y'" in dropped[1] and "source_rank=3" in dropped[1]
+        with _pytest.raises(ConfigError, match="source names"):
+            load_workspaces(p)
+
     def test_save_workspaces_roundtrips_active_id(self, tmp_path):
         import json
 

@@ -26,6 +26,22 @@ from txtlogparser_spark.sources.fixtures import (
 SPEC = FixtureSpec(n_rows=4_000, n_sources=5, seed=42, max_tok=40)
 
 
+def _fixture_lines():
+    vocab = build_vocab()
+    info = {r["source"]: r for r in generate_source_info(SPEC).to_pylist()}
+    return [
+        LineRec(
+            doc_id=r["doc_id"],
+            source=r["source"],
+            source_rank=info[r["source"]]["source_rank"],
+            line_no=int(r["doc_id"].rsplit("-", 1)[1]),
+            text=" ".join(vocab[t] for t in r["tokens"]),
+            tokens=tuple(r["tokens"]),
+        )
+        for r in generate_sequences(SPEC).to_pylist()
+    ]
+
+
 @pytest.fixture(scope="module")
 def fixture_dir(tmp_path_factory):
     d = tmp_path_factory.mktemp("fixture")
@@ -35,21 +51,7 @@ def fixture_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def oracle_result():
-    vocab = build_vocab()
-    seq = generate_sequences(SPEC).to_pylist()
-    info = {r["source"]: r for r in generate_source_info(SPEC).to_pylist()}
-    lines = [
-        LineRec(
-            doc_id=r["doc_id"],
-            source=r["source"],
-            source_rank=info[r["source"]]["source_rank"],
-            line_no=int(r["doc_id"].rsplit("-", 1)[1]),
-            text=" ".join(vocab[t] for t in r["tokens"]),
-            tokens=tuple(r["tokens"]),
-        )
-        for r in seq
-    ]
-    return run_pipeline(lines, default_workspace())
+    return run_pipeline(_fixture_lines(), default_workspace())
 
 
 @pytest.fixture(scope="module")
@@ -263,29 +265,13 @@ class TestEcmaDialectE2E:
             regex_dialect=dialect,
         )
 
-    def _lines(self):
-        vocab = build_vocab()
-        seq = generate_sequences(SPEC).to_pylist()
-        info = {r["source"]: r for r in generate_source_info(SPEC).to_pylist()}
-        return [
-            LineRec(
-                doc_id=r["doc_id"],
-                source=r["source"],
-                source_rank=info[r["source"]]["source_rank"],
-                line_no=int(r["doc_id"].rsplit("-", 1)[1]),
-                text=" ".join(vocab[t] for t in r["tokens"]),
-                tokens=tuple(r["tokens"]),
-            )
-            for r in seq
-        ]
-
     @pytest.mark.parametrize("dialect", ["python", "ecmascript"])
     @pytest.mark.parametrize("fused", [False, True])
     def test_spark_matches_oracle_per_dialect(
         self, spark, fixture_dir, dialect, fused
     ):
         ws = self._ws(dialect)
-        oracle = run_pipeline(self._lines(), ws)
+        oracle = run_pipeline(_fixture_lines(), ws)
         info = spark.read.parquet(f"{fixture_dir}/source_info.parquet")
         pipe = LogPipeline(
             spark, ws, build_vocab(), source_info=info,
@@ -310,8 +296,8 @@ class TestEcmaDialectE2E:
     def test_dialects_actually_diverge(self):
         # guard against vacuity: the lookbehind claims under Python and
         # claims NOTHING under the ECMAScript emulation
-        py = run_pipeline(self._lines(), self._ws("python"))
-        ec = run_pipeline(self._lines(), self._ws("ecmascript"))
+        py = run_pipeline(_fixture_lines(), self._ws("python"))
+        ec = run_pipeline(_fixture_lines(), self._ws("ecmascript"))
         assert py.filter_match_count.get(401, 0) > 0 and py.filter_match_count.get(402, 0) == 0
         assert ec.filter_match_count.get(401, 0) == 0 and ec.filter_match_count.get(402, 0) > 0
         # survival is by OR — the same rows route either way
@@ -539,3 +525,127 @@ def test_display_page_reads_stored_text(spark, fixture_dir, tmp_path):
         # the reference line scrub (OutputData.cpp:78-90)
         scrubbed = joined.replace("\r\n", "\n").rstrip("\r").replace("\r", " ")
         assert r["text"] == scrubbed, r["doc_id"]
+
+
+def _cross_word_ws(pattern="ERROR.*timeout", row=5, dialect="python"):
+    """The launcher workspace plus one cross-word regex filter (row 5 is
+    the benchmark's generic-regex workspace)."""
+    from dataclasses import replace
+
+    ws = default_workspace()
+    return replace(
+        ws,
+        id=2,
+        filters=list(ws.filters) + [FilterSpec(206, row, pattern, regex=True)],
+        regex_dialect=dialect,
+    ).validate()
+
+
+class TestSpanDispatch:
+    """A workspace with a cross-word regex runs the mapInArrow kernel,
+    with the exact scanner only on the rows its literals select."""
+
+    @pytest.mark.parametrize("row", [5, -1])
+    def test_dispatched_plan_and_sink_match_oracle(
+        self, spark, fixture_dir, tmp_path, row
+    ):
+        ws = _cross_word_ws(row=row)
+        oracle = run_pipeline(_fixture_lines(), ws)
+        info = spark.read.parquet(f"{fixture_dir}/source_info.parquet")
+        pipe = LogPipeline(spark, ws, build_vocab(), source_info=info)
+        assert pipe.span_kernel().kind == "dispatched"
+        routed = pipe.run(pipe.load_sequences(f"{fixture_dir}/sequences"))
+        plan = _executed_plan(routed)
+        assert "MapInArrow" in plan and "ArrowEvalPython" not in plan, plan
+        pipe.write_sinks(routed, str(tmp_path))
+        sink = spark.read.parquet(str(tmp_path / "routed"))
+
+        got = sink.orderBy("source_rank", "line_no").select(
+            "doc_id", "filter_spans", "search_spans"
+        ).collect()
+        assert [r["doc_id"] for r in got] == [ol.rec.doc_id for ol in oracle.lines]
+        for r, ol in zip(got, oracle.lines):
+            for col, spans in (
+                ("filter_spans", ol.filter_spans),
+                ("search_spans", ol.search_spans),
+            ):
+                assert spans_tuples(r[col]) == [
+                    (s.start, s.end, s.filter_id, s.search_id) for s in spans
+                ], (col, r["doc_id"])
+        fc = {
+            r["filter_id"]: (r["occurrence_count"], r["line_count"])
+            for r in pipe.filter_counts(sink).collect()
+        }
+        assert fc == {
+            fid: (n, len(oracle.filter_line_map[fid]))
+            for fid, n in oracle.filter_match_count.items()
+        }
+        sc = {
+            r["search_id"]: (r["occurrence_count"], r["line_count"])
+            for r in pipe.search_counts(sink).collect()
+        }
+        assert sc == {
+            sid: (n, len(oracle.search_line_map[sid]))
+            for sid, n in oracle.search_match_count.items()
+        }
+        # first in row order, the cross-word filter claims lines itself
+        assert (206 in oracle.filter_match_count) == (row == -1)
+
+    @pytest.mark.parametrize(
+        "ws_kw",
+        [{"dialect": "ecmascript"}, {"pattern": r"\d+ \w+"}],
+        ids=["ecmascript", "literal_free"],
+    )
+    def test_generic_workspaces_keep_pandas_path(self, spark, fixture_dir, ws_kw):
+        ws = _cross_word_ws(**ws_kw)
+        info = spark.read.parquet(f"{fixture_dir}/source_info.parquet")
+        pipe = LogPipeline(spark, ws, build_vocab(), source_info=info)
+        assert pipe.span_kernel().kind == "generic"
+        seqs = pipe.load_sequences(f"{fixture_dir}/sequences")
+        routed = pipe.run(seqs)
+        plan = _executed_plan(routed)
+        assert "ArrowEvalPython" in plan and "MapInArrow" not in plan, plan
+        oracle = run_pipeline(_fixture_lines(), ws)
+        assert sorted(r["doc_id"] for r in routed.select("doc_id").collect()) == sorted(
+            ol.rec.doc_id for ol in oracle.lines
+        )
+        for kw in ({"arrow_path": True}, {"assembled": False}, {"with_text": False}):
+            with pytest.raises(ValueError, match="dispatchable"):
+                pipe.run(seqs, **kw)
+
+    def test_flags_accept_dispatchable_workspace(self, spark, fixture_dir):
+        """arrow_path=True, assembled=False and with_text=False run on a
+        dispatchable workspace; text is then built for scanner rows only."""
+        from txtlogparser_spark.operators.aggregate import filter_metrics_flat
+
+        ws = _cross_word_ws(row=-1)
+        oracle = run_pipeline(_fixture_lines(), ws)
+        info = spark.read.parquet(f"{fixture_dir}/source_info.parquet")
+        pipe = LogPipeline(spark, ws, build_vocab(), source_info=info)
+        seqs = pipe.load_sequences(f"{fixture_dir}/sequences")
+        want_rows = sorted(ol.rec.doc_id for ol in oracle.lines)
+        for kw in ({"arrow_path": True}, {"with_text": False}):
+            routed = pipe.run(seqs, **kw)
+            assert ("text" in routed.columns) == ("with_text" not in kw)
+            assert sorted(r["doc_id"] for r in routed.select("doc_id").collect()) == want_rows
+        flat = pipe.run(seqs, with_text=False, assembled=False)
+        assert "text" not in flat.columns and "filter_spans" not in flat.columns
+        assert "MapInArrow" in _executed_plan(flat)
+        fm = {
+            r["filter_id"]: (r["occurrence_count"], r["line_count"])
+            for r in filter_metrics_flat(flat).collect()
+        }
+        assert fm == {
+            fid: (n, len(oracle.filter_line_map[fid]))
+            for fid, n in oracle.filter_match_count.items()
+        }
+        # the pandas path is still there when asked for
+        assert "ArrowEvalPython" in _executed_plan(pipe.run(seqs, arrow_path=False))
+        # ... but the pandas word-table UDF cannot serve this workspace,
+        # and a text-free sink then fails for arrow_path=False alone
+        with pytest.raises(ValueError, match="word-local"):
+            pipe.run(seqs, token_tables=True, arrow_path=False)
+        for kw in ({"with_text": False}, {"assembled": False}):
+            with pytest.raises(ValueError, match="here: arrow_path=False") as err:
+                pipe.run(seqs, arrow_path=False, **kw)
+            assert "not dispatchable" not in str(err.value)

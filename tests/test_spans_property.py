@@ -109,6 +109,18 @@ def test_engine_regex_unicode_casefold_matches_oracle():
         assert efs == want[0]
 
 
+def test_engine_inline_ignorecase_matches_oracle():
+    """An inline (?i) folds case even when caseSensitive=True, so the
+    literal precheck must fold too (it used to look for 'error' verbatim
+    and miss 'ERROR')."""
+    for text, pat in [("an ERROR here", "(?i)error"), ("Kit", "(?i)k(?-i:it)")]:
+        filters = [FilterSpec(201, 0, pat, caseSensitive=True, regex=True)]
+        efs, _, _ = run_engine(text, filters, [])
+        want = run_oracle(text, filters, [])
+        assert want is not None, "oracle must match"
+        assert efs == want[0]
+
+
 class TestEmptySegmentReferenceSemantics:
     """FilterData.cpp:154-159/221-229 + OutputData.cpp:291-306: an empty
     unclaimed subline a matcher finds nothing in is NOT re-emitted, so

@@ -133,6 +133,22 @@ def test_empty_ids_matches_generic_path():
         assert got[2] == want[2], (filters, searches)
 
 
+def test_empty_word_row_matches_generic_path():
+    """A row of one empty vocab word joins to "": it takes the empty-line
+    sentinel, as the generic extractor sees an empty line."""
+    vocab = ["", "ERROR"]
+    for filters, searches in WORKSPACES:
+        tables = build_word_tables(
+            vocab, filters, searches, want_search=True, want_combined=True
+        )
+        got = spans_for_ids(
+            np.asarray([0], dtype=np.int64), *tables,
+            want_search=True, want_combined=True,
+        )
+        want = extract_line_spans("", _matcher_table(filters), _matcher_table(searches), True)
+        assert got == want, (filters, searches)
+
+
 def test_empty_ids_reference_shapes():
     # non-claiming filter first: empty line vanishes (empty span list),
     # a LATER zero-width regex never sees it
@@ -160,6 +176,21 @@ _ARROW_ROW = st.tuples(
 )
 
 
+def _token_rows(rows, cut):
+    """(tokens, first row kept): the rows as a list<int32> array with
+    `cut` rows sliced off each end, and the index of the first kept."""
+    import pyarrow as pa
+
+    lens = [len(ids) for ids, _ in rows]
+    full = pa.ListArray.from_arrays(
+        pa.array(np.concatenate(([0], np.cumsum(lens, dtype=np.int64))), pa.int32()),
+        pa.array([t for ids, _ in rows for t in ids], pa.int32()),
+        mask=pa.array([null for _, null in rows], pa.bool_()),
+    )
+    lo = min(cut[0], len(rows))
+    return full.slice(lo, max(len(rows) - lo - cut[1], 0)), lo
+
+
 @settings(max_examples=300, deadline=None)
 @given(
     rows=st.lists(_ARROW_ROW, max_size=14),
@@ -178,14 +209,7 @@ def test_arrow_mapper_property(rows, cut, ws_idx, include_search, include_text):
     from txtlogparser_spark.functions.arrow_spans import make_arrow_span_mapper
 
     filters, searches = WORKSPACES[ws_idx]
-    lens = [len(ids) for ids, _ in rows]
-    full = pa.ListArray.from_arrays(
-        pa.array(np.concatenate(([0], np.cumsum(lens, dtype=np.int64))), pa.int32()),
-        pa.array([t for ids, _ in rows for t in ids], pa.int32()),
-        mask=pa.array([null for _, null in rows], pa.bool_()),
-    )
-    lo = min(cut[0], len(rows))
-    tokens = full.slice(lo, max(len(rows) - lo - cut[1], 0))
+    tokens, lo = _token_rows(rows, cut)
     fn, fields = make_arrow_span_mapper(
         VOCAB, filters, searches,
         include_search=include_search, include_text=include_text,
@@ -498,3 +522,250 @@ def test_empty_rows_through_spark_and_arrow_paths(spark):
             zip(tab["f_start"][i], tab["f_end"][i], tab["f_id"][i], tab["f_row"][i])
         )
         assert flat == [sp[:4] for sp in w], (i, flat, w)
+
+
+# ------------------------------------------- row-level dispatch (mapper)
+#
+# Workspaces mixing word-local matchers with cross-word ones. The mapper
+# must equal the generic fused extractor column for column whatever the
+# mix; `span_kernel` decides only which of the two the pipeline runs.
+
+# "\u212aelvin" starts with the Kelvin sign, "\u017ftatus" with a long s:
+# re.IGNORECASE folds them to k and s, ASCII folding does not
+_KELVIN, _LONG_S = "\u212aelvin", "\u017ftatus"
+_DISPATCH_VOCAB = VOCAB + ["timeout", "", _KELVIN, _LONG_S, "café"]
+
+# (pattern, caseSensitive, wholeWord, regex)
+_LOCAL_POOL = [
+    ("ERROR", True, False, False),
+    ("warn", False, True, False),
+    (r"code=\d+", False, False, True),
+    (r"conn_error", False, True, True),
+    ("latency", False, False, False),
+    (r"\d+ms", False, False, True),
+    ("aa", True, False, False),
+]
+_CROSS_POOL = [
+    (r"ERROR.*timeout", True, False, True),
+    (r"error\W+retry", False, False, True),      # case-insensitive
+    (r"retry.*code", False, True, True),         # wholeWord
+    (r"(?i)error.*GET", True, False, True),      # inline case folding
+    (r"kelvin.*errors?", False, False, True),    # K (Kelvin sign) folds to k
+    (r"STATUS.*x", False, False, True),          # long s folds to s
+    (r"café.*x", True, False, True),             # non-ASCII literal
+]
+# cross-word matchers the pipeline keeps on the generic extractor
+_GENERIC_POOL = [
+    (r"\d+ \w+", True, False, True),             # no literal
+    (r"x*", True, False, True),                  # zero-width, no literal
+    ("code=200 x", False, False, False),         # literal holds a space
+    (r"latency=7ms x", True, False, True),       # literal holds a space
+]
+_POOL = _LOCAL_POOL + _CROSS_POOL + _GENERIC_POOL
+
+
+def _specs(cls, base, picks):
+    return [
+        cls(base + i, i, p, caseSensitive=cs, wholeWord=ww, regex=rx)
+        for i, (p, cs, ww, rx) in enumerate(picks)
+    ]
+
+
+def _mapper_vs_fused(tokens, filters, searches, include_search, include_text):
+    import pyarrow as pa
+
+    from txtlogparser_spark.functions.arrow_spans import make_arrow_span_mapper
+    from txtlogparser_spark.functions.spans import make_fused_extractor
+
+    fn, fields = make_arrow_span_mapper(
+        _DISPATCH_VOCAB, filters, searches,
+        include_search=include_search, include_text=include_text,
+    )
+    batch = pa.RecordBatch.from_arrays([tokens], names=["tokens"])
+    (out,) = list(fn(iter([batch])))
+    assert out.schema.names == ["tokens"] + [f.name for f in fields]
+    got = out.to_pydict()
+    want = make_fused_extractor(
+        _DISPATCH_VOCAB, filters, searches, include_search=include_search
+    ).func(tokens.to_pandas())
+    for name in [f.name for f in fields]:
+        assert got[name] == [
+            v if isinstance(v, str) else list(v) for v in want[name]
+        ], name
+    if not include_text:
+        assert "text" not in got
+
+
+_DISPATCH_ROW = st.tuples(
+    st.lists(st.integers(-2, len(_DISPATCH_VOCAB) + 1), max_size=12),
+    st.booleans(),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    rows=st.lists(_DISPATCH_ROW, max_size=14),
+    cut=st.tuples(st.integers(0, 4), st.integers(0, 4)),
+    fpicks=st.lists(st.sampled_from(_POOL), max_size=4, unique=True),
+    spicks=st.lists(st.sampled_from(_POOL), max_size=3, unique=True),
+    include_search=st.booleans(),
+    include_text=st.booleans(),
+)
+def test_dispatch_mapper_equals_fused_property(
+    rows, cut, fpicks, spicks, include_search, include_text
+):
+    """The dispatching mapper == make_fused_extractor (text and every
+    f_*/s_* column) on random mixed workspaces, over null, empty and
+    sliced batches, out-of-vocab ids, an empty and non-ASCII vocab
+    words; literal-free and space-literal matchers are classified
+    generic."""
+    from txtlogparser_spark.functions.arrow_spans import span_kernel
+
+    filters = _specs(FilterSpec, 201, fpicks)
+    searches = _specs(SearchSpec, 301, spicks)
+    _mapper_vs_fused(
+        _token_rows(rows, cut)[0], filters, searches, include_search, include_text
+    )
+    used = fpicks + (spicks if include_search else [])
+    kernel = span_kernel(filters, searches if include_search else [])
+    if any(p in _GENERIC_POOL for p in used):
+        assert kernel.kind == "generic", kernel
+    elif any(p in _CROSS_POOL for p in used):
+        assert kernel.kind == "dispatched", kernel
+    else:
+        assert kernel.kind == "word_table", kernel
+
+
+@pytest.mark.parametrize("include_search", [False, True])
+def test_dispatch_fixed_cases(include_search):
+    """Cases a random draw can miss: a lone cross-word filter on empty
+    and null rows (the full workspace drops the empty line, the
+    word-local matchers alone would keep it), an empty vocab word, and
+    rows the case folding reaches only through non-ASCII words."""
+    w = {x: i for i, x in enumerate(_DISPATCH_VOCAB)}
+    rows = [
+        ([], False),
+        ([w["x"]], True),
+        ([w[""]], False),
+        ([w[_KELVIN], w["errors"]], False),
+        ([w[_LONG_S], w["x"]], False),
+        ([w["ERROR"], w["filler"], w["timeout"]], False),
+        ([w["error"], w["_retry_"]], False),
+        ([w["ERROR"], w["GET"]], False),
+    ]
+    tokens = _token_rows(rows, (0, 0))[0]
+    for picks in (
+        [_CROSS_POOL[0]],
+        [_CROSS_POOL[4], _LOCAL_POOL[0]],
+        [_LOCAL_POOL[1], _CROSS_POOL[5], _CROSS_POOL[1]],
+        [_LOCAL_POOL[2], _CROSS_POOL[0], _LOCAL_POOL[0]],
+    ):
+        filters = _specs(FilterSpec, 201, picks)
+        for spicks in (
+            [_CROSS_POOL[3], _LOCAL_POOL[5]],
+            [_LOCAL_POOL[0], _CROSS_POOL[0], _CROSS_POOL[3]],
+        ):
+            searches = _specs(SearchSpec, 301, spicks)
+            for include_text in (False, True):
+                _mapper_vs_fused(
+                    tokens, filters, searches, include_search, include_text
+                )
+
+
+def test_dispatch_scans_only_literal_rows(monkeypatch):
+    """No per-row Python on kernel rows: only rows holding every literal
+    of some cross-word matcher reach the exact scanner, and a word-local
+    workspace never reaches it."""
+    import pyarrow as pa
+
+    from txtlogparser_spark.functions import arrow_spans
+
+    seen = []
+    real = arrow_spans.claim_spans
+
+    def counting(text, *a, **k):
+        seen.append(text)
+        return real(text, *a, **k)
+
+    monkeypatch.setattr(arrow_spans, "claim_spans", counting)
+    rng = np.random.RandomState(3)
+    rows = [rng.randint(0, len(_DISPATCH_VOCAB), rng.randint(0, 10)).tolist() for _ in range(400)]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(rows, type=pa.list_(pa.int32()))], names=["tokens"]
+    )
+    local = _specs(FilterSpec, 201, _LOCAL_POOL[:3])
+    filters = local + _specs(FilterSpec, 204, [_CROSS_POOL[0]])
+    fn, _ = arrow_spans.make_arrow_span_mapper(_DISPATCH_VOCAB, filters, [])
+    list(fn(iter([batch])))
+    texts = [" ".join(_DISPATCH_VOCAB[t] for t in r) for r in rows]
+    want = [t for t, r in zip(texts, rows)
+            if any("ERROR" in _DISPATCH_VOCAB[i] for i in r)
+            and any("timeout" in _DISPATCH_VOCAB[i] for i in r)]
+    assert 0 < len(want) < len(rows) / 4
+    assert seen == want
+
+    fn, _ = arrow_spans.make_arrow_span_mapper(_DISPATCH_VOCAB, local, [])
+    seen.clear()
+    list(fn(iter([batch])))
+    assert seen == []
+
+
+def test_span_kernel_outcomes(spark):
+    """LogPipeline.span_kernel reports each of the three kernels, with
+    the cross-word literals or the reason."""
+    from dataclasses import replace
+
+    from txtlogparser_spark.plans.pipeline import LogPipeline
+    from txtlogparser_spark.sources.fixtures import default_workspace
+
+    ws = default_workspace()
+    k = LogPipeline(spark, ws, VOCAB).span_kernel()
+    assert (k.kind, k.cross_word, k.reason) == ("word_table", (), "")
+
+    cross = FilterSpec(206, 5, "ERROR.*timeout", regex=True)
+    gws = replace(ws, filters=list(ws.filters) + [cross])
+    k = LogPipeline(spark, gws, VOCAB).span_kernel()
+    assert k.kind == "dispatched"
+    assert k.cross_word == ((206, ("ERROR", "timeout")),)
+    assert k.record() == {
+        "kind": "dispatched", "cross_word": {"206": ["ERROR", "timeout"]}, "reason": "",
+    }
+
+    bare = FilterSpec(206, 5, r"\d+ \w+", regex=True)
+    k = LogPipeline(
+        spark, replace(ws, filters=list(ws.filters) + [bare]), VOCAB
+    ).span_kernel()
+    assert k.kind == "generic" and "206" in k.reason, k
+    k = LogPipeline(spark, replace(gws, regex_dialect="ecmascript"), VOCAB).span_kernel()
+    assert k.kind == "generic" and "ecmascript" in k.reason, k
+    # a cross-word search counts only while searches run
+    sws = replace(ws, searches=[SearchSpec(301, 0, "a.*b", regex=True)])
+    pipe = LogPipeline(spark, sws, VOCAB)
+    assert pipe.span_kernel().kind == "dispatched"
+    assert pipe.span_kernel(with_search=False).kind == "word_table"
+
+
+def test_token_candidates_cover_case_folding():
+    """The token prefilter keeps every word a filter's regex can match
+    in: an inline (?i) folds case under caseSensitive=True, and
+    re.IGNORECASE folds the Kelvin sign and long s onto ASCII letters."""
+    from txtlogparser_spark.functions.token_prefilter import candidate_token_ids
+
+    vocab = ["ERROR", "error", _KELVIN, "kelvin", _LONG_S, "status", "fine"]
+    for pat, cs in [
+        ("(?i)error", True), ("kelvin", False), ("STATUS", False),
+        ("(?i)kel", True), ("error", True), ("status", True),
+    ]:
+        f = FilterSpec(201, 0, pat, caseSensitive=cs, regex=True)
+        cands = set(candidate_token_ids(f, vocab))
+        creg = f.compiled()
+        assert {i for i, w in enumerate(vocab) if creg.search(w)} <= cands, pat
+    assert candidate_token_ids(FilterSpec(201, 0, "error", regex=True), vocab) == [1]
+    # one rule with the row dispatch (token_prefilter.mask_literals): the
+    # longest space-free literal is tested, and a case-folding regex has
+    # no ASCII-only mask for a non-ASCII literal (the long s folds onto s)
+    f = FilterSpec(201, 0, "stat.*a long phrase", regex=True)
+    assert candidate_token_ids(f, vocab) == [5]
+    f = FilterSpec(201, 0, _LONG_S, caseSensitive=False, regex=True)
+    assert f.compiled().search("status")
+    assert candidate_token_ids(f, vocab) is None

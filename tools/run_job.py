@@ -8,7 +8,8 @@ Launch from the repository root (multi-executor layout, or local[N]):
 
 Runs parse → enrich → route → aggregate over the sequences table, writes
 the routed sink (partitioned by route, source), the per-filter/search
-metrics tables, and a run manifest; prints a one-line JSON summary.
+metrics tables, and a run manifest; prints a one-line JSON summary that
+also names the span kernel that ran, and why (LogPipeline.span_kernel).
 No repo imports besides the shipped --py-files zip: this file must stay
 runnable from a bare spark-submit with only the zip on the PYTHONPATH.
 """
@@ -129,6 +130,9 @@ def main() -> None:
                 "rows_routed": n,
                 "wall_sec": round(dt, 2),
                 "out": args.out,
+                "span_kernel": pipe.span_kernel(
+                    with_search=not args.no_search
+                ).record(),
                 "filter_counts": {
                     str(r["filter_id"]): [r["occurrence_count"], r["line_count"]]
                     for r in spark.read.parquet(

@@ -12,9 +12,12 @@ divergence, SURVEY.md §2.3 #6/#7).
 from __future__ import annotations
 
 import json
+import logging
 import re
 from dataclasses import dataclass, field, asdict
 from typing import Iterable
+
+_log = logging.getLogger(__name__)
 
 FORMAT_VERSION = 1
 
@@ -241,6 +244,12 @@ class WorkspaceConfig:
                 if s.source not in seen_names:
                     seen_names.add(s.source)
                     kept.append(s)
+                else:
+                    _log.warning(
+                        "workspace id=%s: dropped duplicate source %r "
+                        "(source_rank=%s); keeping its first entry",
+                        self.id, s.source, s.source_rank,
+                    )
             self.sources[:] = kept
         ranks = [s.source_rank for s in self.sources]
         if len(ranks) != len(set(ranks)):
@@ -334,7 +343,8 @@ def load_workspaces(
     if version != FORMAT_VERSION:
         raise ConfigError(f"unsupported formatVersion {version!r}")
     # the same compat mode that tolerates reference-era invalid regexes
-    # also tolerates their duplicate file paths (keep-first)
+    # also tolerates their duplicate file paths (keep-first, each dropped
+    # path logged by WorkspaceConfig.validate)
     source_dups = "keep_first" if invalid_regex == "match_nothing" else "reject"
     return [
         WorkspaceConfig.from_dict(

@@ -13,10 +13,14 @@ semantics (FilterData.cpp:110-238, OutputData.cpp:272-501):
   splitting them left/middle/right (OutputData.cpp:429-495)
 
 Design notes for 100 TB scale:
-- This is the ONLY Python stage in the hot path; it is Arrow-batched
-  (pandas UDF), never row-at-a-time. Everything before it (scan, source
-  pruning, coarse prefilter) and after it (survival filter, explode,
-  aggregation, routing) is JVM-side Catalyst.
+- This scanner is the exact per-line evaluator. It runs in one of two
+  places, both inside the one Arrow-batched span stage: as the fused
+  pandas UDF (`make_fused_extractor`) on every row of a workspace the
+  word tables cannot serve, or inside the mapInArrow kernel
+  (functions/arrow_spans.py) on only the rows that hold every required
+  literal (`_required_literals`) of some cross-word matcher. Everything
+  before the stage (scan, source pruning, coarse prefilter) and after it
+  (survival filter, explode, aggregation, routing) is JVM-side Catalyst.
 - A Spark-native coarse prefilter (`operators.route.survival_prefilter`)
   prunes non-candidate rows BEFORE this UDF so the Python stage only sees
   rows that can possibly survive — at scale that's the difference between
@@ -29,6 +33,7 @@ Design notes for 100 TB scale:
 
 from __future__ import annotations
 
+import re
 from typing import Iterable, List, Sequence, Tuple
 
 import pandas as pd
@@ -81,27 +86,34 @@ _ASCII_LOWER = str.maketrans(
 )
 
 
-def _required_literal(pattern: str) -> str:
-    """Longest top-level literal run REQUIRED by every match of `pattern`
-    (conservative: empty string when unsure). Used as a C-speed `find`
-    precheck before running the regex engine on a segment."""
+def _required_literals(pattern: str) -> List[str]:
+    """Every top-level literal run of `pattern`, in pattern order. The
+    top level is a concatenation, so every match of the pattern holds
+    each run verbatim (up to the pattern's case folding). Conservative:
+    an empty list when the pattern does not parse."""
     try:
         from re import _parser  # CPython internal, guarded
 
         items = _parser.parse(pattern)
     except Exception:
-        return ""
-    best, cur = [], []
+        return []
+    runs, cur = [], []
     for op, arg in items:
         if str(op) == "LITERAL":
             cur.append(chr(arg))
-        else:
-            if len(cur) > len(best):
-                best = cur
+        elif cur:
+            runs.append("".join(cur))
             cur = []
-    if len(cur) > len(best):
-        best = cur
-    lit = "".join(best)
+    if cur:
+        runs.append("".join(cur))
+    return runs
+
+
+def _required_literal(pattern: str) -> str:
+    """Longest top-level literal run REQUIRED by every match of `pattern`
+    (conservative: empty string when unsure). Used as a C-speed `find`
+    precheck before running the regex engine on a segment."""
+    lit = max(_required_literals(pattern), key=len, default="")
     return lit if lit.isascii() else ""
 
 
@@ -117,6 +129,8 @@ def _compile_matchers(specs) -> List[tuple]:
         if creg is not None:
             plain = not any(t in creg.pattern for t in _CONTEXT_METACHARS)
             lit = _required_literal(creg.pattern)
+            # an inline (?i) folds case as much as caseSensitive=False does
+            cs = cs and not creg.flags & re.IGNORECASE
             if not cs:
                 lit = lit.translate(_ASCII_LOWER)
             out.append((m[0], m[1], creg, plain, None, cs, ww, lit))
@@ -188,6 +202,58 @@ def _segment_matches(
     return [(seg_start + g.start(), seg_start + g.end()) for g in creg.finditer(sub)]
 
 
+def claim_spans(
+    text: str,
+    folded: str,
+    spans: List[tuple],
+    matchers: Sequence[tuple],
+    search: bool,
+) -> List[tuple]:
+    """Apply compiled `matchers` in order to one span list of a line, first
+    match wins: each matcher re-splits only the still-unclaimed segments
+    (the filter pass when `search` is False, the search pass otherwise).
+    `folded` is `text` ASCII-lowered."""
+    k = 4 if search else 2
+    for m in matchers:
+        mid, mrow = m[0], m[1]
+        nxt: List[tuple] = []
+        changed = False
+        for sp in spans:
+            if sp[k] != -1:  # already claimed
+                nxt.append(sp)
+                continue
+            positions = _segment_matches(text, folded, sp[0], sp[1], m)
+            if not positions:
+                # an EMPTY unclaimed segment a matcher found nothing
+                # in is NOT re-emitted: the reference's apply() only
+                # pushes the unmatched remainder when it is non-empty
+                # (FilterData.cpp:154-159, 221-229; the search loop
+                # shares apply()), so an empty line vanishes from the
+                # subline list after the first non-claiming matcher and
+                # later zero-width-capable matchers never see it (parity
+                # bug: the engine used to keep it and let a later 'x*'
+                # claim the line the reference drops)
+                if sp[1] > sp[0]:
+                    nxt.append(sp)
+                else:
+                    changed = True
+                continue
+            changed = True
+            last = sp[0]
+            for s, e in positions:
+                if s > last:
+                    nxt.append((last, s) + sp[2:])
+                nxt.append(
+                    (s, e, -1, -1, mid, mrow) if search else (s, e, mid, mrow, -1, -1)
+                )
+                last = e
+            if last < sp[1]:
+                nxt.append((last, sp[1]) + sp[2:])
+        if changed:
+            spans = nxt
+    return spans
+
+
 def extract_line_spans(
     text: str,
     filters: Sequence[tuple],
@@ -196,7 +262,9 @@ def extract_line_spans(
     folded: str = None,
 ):
     """Full per-line span computation on pre-compiled matcher tables
-    (from `_matcher_table` → `_compile_matchers`).
+    (from `_matcher_table` → `_compile_matchers`): the filter pass with
+    first-match-wins claiming, then the search pass over the original
+    line.
 
     Returns (filter_spans, search_spans, combined_spans) as lists of
     6-int tuples. Pure function — unit-testable off-cluster.
@@ -204,78 +272,8 @@ def extract_line_spans(
     n = len(text)
     if folded is None:
         folded = text.translate(_ASCII_LOWER)
-
-    # ---- filter pass with first-match-wins claiming ----
-    fspans: List[tuple] = [(0, n, -1, -1, -1, -1)]
-    if filters:
-        for m in filters:
-            fid, frow = m[0], m[1]
-            nxt: List[tuple] = []
-            changed = False
-            for sp in fspans:
-                if sp[2] != -1:  # already claimed
-                    nxt.append(sp)
-                    continue
-                positions = _segment_matches(text, folded, sp[0], sp[1], m)
-                if not positions:
-                    # an EMPTY unclaimed segment a matcher found nothing
-                    # in is NOT re-emitted: the reference's apply() only
-                    # pushes the unmatched remainder when it is non-empty
-                    # (FilterData.cpp:154-159, 221-229), so an empty line
-                    # vanishes from the subline list after the first
-                    # non-claiming filter and later zero-width-capable
-                    # matchers never see it (parity bug: the engine used
-                    # to keep it and let a later 'x*' claim the line the
-                    # reference drops)
-                    if sp[1] > sp[0]:
-                        nxt.append(sp)
-                    else:
-                        changed = True
-                    continue
-                changed = True
-                last = sp[0]
-                for s, e in positions:
-                    if s > last:
-                        nxt.append((last, s) + sp[2:])
-                    nxt.append((s, e, fid, frow, -1, -1))
-                    last = e
-                if last < sp[1]:
-                    nxt.append((last, sp[1]) + sp[2:])
-            if changed:
-                fspans = nxt
-
-    # ---- search pass over the original line ----
-    sspans: List[tuple] = [(0, n, -1, -1, -1, -1)]
-    if searches:
-        for m in searches:
-            sid, srow = m[0], m[1]
-            nxt = []
-            changed = False
-            for sp in sspans:
-                if sp[4] != -1:
-                    nxt.append(sp)
-                    continue
-                positions = _segment_matches(text, folded, sp[0], sp[1], m)
-                if not positions:
-                    # same empty-segment drop as the filter pass (the
-                    # reference's search loop shares apply())
-                    if sp[1] > sp[0]:
-                        nxt.append(sp)
-                    else:
-                        changed = True
-                    continue
-                changed = True
-                last = sp[0]
-                for s, e in positions:
-                    if s > last:
-                        nxt.append((last, s) + sp[2:])
-                    nxt.append((s, e, -1, -1, sid, srow))
-                    last = e
-                if last < sp[1]:
-                    nxt.append((last, sp[1]) + sp[2:])
-            if changed:
-                sspans = nxt
-
+    fspans = claim_spans(text, folded, [(0, n, -1, -1, -1, -1)], filters, False)
+    sspans = claim_spans(text, folded, [(0, n, -1, -1, -1, -1)], searches, True)
     combined: List[tuple] = []
     if want_combined:
         combined = _combine_spans(fspans, sspans)

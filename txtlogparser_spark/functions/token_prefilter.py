@@ -18,10 +18,16 @@ scale with selective filters this is the dominant saving.
 
 Fallbacks (correctness first — the prefilter must be a NECESSARY
 condition, never dropping a surviving row):
-- pattern contains a space (can match across tokens) → no token
+- the literal tested is the longest of `mask_literals(f)`: a filter's
+  required literal runs (functions.spans._required_literals) that hold
+  no space (a space can match across tokens); none → no token
   prefilter for that filter;
-- regex with no required literal (functions.spans._required_literal)
-  → no token prefilter;
+- case-insensitive matching (caseSensitive=False, or an inline (?i))
+  compares ASCII-folded words and keeps every non-ASCII word as a
+  candidate: re.IGNORECASE folds beyond ASCII (`literal_word_mask`);
+  a case-folding regex tests ASCII literals only, for the same reason.
+  The row dispatch of functions/arrow_spans.py uses the same two
+  functions, so one rule decides what a word mask can test;
 - any filter without a candidate set → the whole OR is indeterminate →
   prefilter disabled (a row might survive via that filter).
 
@@ -32,17 +38,58 @@ decides survival.
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+import re
+from typing import List, Optional, Sequence, Tuple
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
-from txtlogparser_spark.config import FilterSpec
-from txtlogparser_spark.functions.spans import _ASCII_LOWER, _required_literal
+from txtlogparser_spark.config import FilterSpec, MatcherSpec
+from txtlogparser_spark.functions.detokenize import UNK
+from txtlogparser_spark.functions.spans import _ASCII_LOWER, _required_literals
 
 
-def _fold(s: str) -> str:
-    return s.translate(_ASCII_LOWER)
+def folds_case(m: MatcherSpec) -> bool:
+    """Does matcher `m` compare case-insensitively? caseSensitive=False,
+    or an inline (?i) in a regex pattern."""
+    creg = m.compiled()
+    return not m.caseSensitive or bool(creg is not None and creg.flags & re.IGNORECASE)
+
+
+def literal_word_mask(lit: str, words: Sequence[str], fold: bool) -> np.ndarray:
+    """Per word: can the word hold `lit`? A folded mask compares
+    ASCII-lowered text and counts every non-ASCII word as a hit, since
+    re.IGNORECASE folds beyond ASCII (Kelvin sign K ~ k, long s ~ s)."""
+    if not fold:
+        return np.fromiter((lit in w for w in words), bool, len(words))
+    lit = lit.translate(_ASCII_LOWER)
+    return np.fromiter(
+        (not w.isascii() or lit in w.translate(_ASCII_LOWER) for w in words),
+        bool,
+        len(words),
+    )
+
+
+def mask_literals(m: MatcherSpec) -> Tuple[str, ...]:
+    """The required literals of matcher `m` that a word mask
+    (`literal_word_mask`) can test soundly, in pattern order: non-empty
+    ones with no space (each occurrence then lies inside one word), and
+    for a case-folding regex only ASCII ones (re.IGNORECASE folds a
+    non-ASCII literal such as the long s onto ASCII words). Python
+    dialect: regex literals come from the compiled `re` pattern."""
+    if m.regex:
+        lits = _required_literals(m.compiled().pattern)
+        ascii_only = folds_case(m)
+    else:
+        lits, ascii_only = [m.pattern], False
+    return tuple(
+        dict.fromkeys(
+            lit
+            for lit in lits
+            if lit and " " not in lit and (lit.isascii() or not ascii_only)
+        )
+    )
 
 
 def candidate_token_ids(
@@ -51,30 +98,19 @@ def candidate_token_ids(
     """Token ids whose surface form could participate in a match of
     filter `f`, or None when no sound token-level necessary condition
     exists."""
-    if f.regex:
-        if dialect != "python":
-            # _required_literal parses with Python `re` semantics; under
-            # the ecmascript emulation the same pattern can match
-            # different strings (identity escapes, literal braces), so
-            # no sound token-level condition is derivable here
-            return None
-        lit = _required_literal(f.pattern)
-        if not lit:
-            return None
-    else:
-        lit = f.pattern
-    if " " in lit or not lit:
+    if f.regex and dialect != "python":
+        # mask_literals parses with Python `re` semantics; under the
+        # ecmascript emulation the same pattern can match different
+        # strings (identity escapes, literal braces), so no sound
+        # token-level condition is derivable here
         return None
-    from txtlogparser_spark.functions.detokenize import UNK
-
-    if f.caseSensitive:
-        if lit in UNK:
-            return None  # out-of-range ids render as UNK; can't prune soundly
-        return [i for i, w in enumerate(vocab) if lit in w]
-    lit_f = _fold(lit)
-    if lit_f in _fold(UNK):
+    lit = max(mask_literals(f), key=len, default="")
+    if not lit:
         return None
-    return [i for i, w in enumerate(vocab) if lit_f in _fold(w)]
+    mask = literal_word_mask(lit, list(vocab) + [UNK], folds_case(f))
+    if mask[-1]:
+        return None  # out-of-range ids render as UNK; can't prune soundly
+    return np.flatnonzero(mask[:-1]).tolist()
 
 
 def token_survival_prefilter(

@@ -191,8 +191,9 @@ def build_word_tables(
     reference semantics: the empty line vanishes after the first
     non-claiming filter, FilterData.cpp:154-159/221-229, while a
     zero-width regex as the first filter claims it). spans_for_ids and
-    the arrow mapper return it verbatim for empty token arrays so the
-    fast path agrees with the generic extractor on empty lines.
+    the arrow mapper return it verbatim for rows whose text is "" (no
+    tokens, or one empty vocab word) so the fast path agrees with the
+    generic extractor on empty lines.
     """
     ftab = _matcher_table(filters)
     stab = _matcher_table(searches) if want_search else []
@@ -278,16 +279,17 @@ def spans_for_ids(
     """Pure per-row computation: token ids (already mapped into table
     range) → (filter_spans, search_spans, combined_spans). Testable
     off-cluster against extract_line_spans on the joined text."""
-    if len(ids) == 0:
+    lens = wlen[ids]
+    k = len(ids)
+    n = int(lens.sum()) + (k - 1)
+    if n <= 0:
+        # empty line (no tokens, or one empty vocab word) → the
         # empty-line sentinel (last table slot): the precomputed
         # extract_line_spans("") result for this matcher set — an empty
         # list when a non-claiming filter exists (the reference drops the
         # empty subline), a claimed (0,0) span when a zero-width regex is
         # the first filter. NOT the old synthetic whole-line span.
         return list(ffrags[-1]), list(sfrags[-1]), list(cfrags[-1])
-    lens = wlen[ids]
-    k = len(ids)
-    n = int(lens.sum()) + (k - 1)
     hmask = has_claim[ids]
     if not hmask.any():
         whole = [(0, n, -1, -1, -1, -1)]

@@ -9,10 +9,15 @@ Stage order of the launcher's plan, `run()` (fused, the default):
 
   scan (source-pruned, column-pruned)          # S2 IN predicate pushed down
     → token survival prefilter (JVM)           # on token ids, before Python
-    → ONE span stage (Arrow, the only Python stage):
-        word-local matchers, python dialect:   mapInArrow word-table kernel
-                                               (functions/arrow_spans.py)
-        otherwise:                             fused detokenize + generic
+    → ONE span stage (Arrow, the only Python stage), per span_kernel():
+        word_table (every matcher word-local,  mapInArrow word-table kernel
+          python dialect):                     (functions/arrow_spans.py)
+        dispatched (each cross-word matcher    the same mapInArrow kernel;
+          has a space-free required literal):  rows holding every literal
+                                               of some cross-word matcher
+                                               go to the exact text
+                                               scanner in the same batch
+        generic (otherwise, incl. ecmascript): fused detokenize + generic
                                                text scanner (spans.py)
     → exact survival filter (JVM exists())     # OR-semantics
     → broadcast enrich (source_rank, payload)  # no fact-table shuffle
@@ -42,6 +47,11 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from txtlogparser_spark.config import WorkspaceConfig
+from txtlogparser_spark.functions.arrow_spans import (
+    SpanKernel,
+    make_arrow_span_mapper,
+    span_kernel,
+)
 from txtlogparser_spark.functions.detokenize import (
     has_carriage_return,
     make_detokenizer,
@@ -188,6 +198,15 @@ class LogPipeline:
         return search_metrics(routed)
 
     # ---- one-call plan ----
+    def span_kernel(self, *, with_search: bool = True) -> SpanKernel:
+        """The span kernel `run()` uses for this workspace with its
+        default flags, and why (functions/arrow_spans.py::SpanKernel)."""
+        return span_kernel(
+            self.ws.enabled_filters(),
+            self.ws.enabled_searches() if with_search else [],
+            self.ws.regex_dialect,
+        )
+
     def run(
         self,
         seqs: DataFrame,
@@ -202,17 +221,28 @@ class LogPipeline:
         """Full plan. `fused=True` (default) uses the scale path:
 
         token-level JVM prefilter (no detokenize needed to prune)
-          → ONE fused Arrow UDF (detokenize + span extraction)
+          → ONE span stage (Arrow)
           → JVM survival / enrich / route.
 
-        When every matcher is word-local (functions/token_spans.py), the
-        fused UDF is the vocabulary-precompute variant: per-word span
-        decompositions are computed once per vocab word at plan build, and
-        the default mapInArrow kernel (functions/arrow_spans.py) assembles
-        a whole batch in numpy with no per-row Python. `token_tables`
-        forces (True) or disables (False) that path; None = auto-detect.
-        All paths produce identical results (tests/test_pipeline_e2e.py
-        vs the oracle; test_token_spans.py pins token-table == generic)."""
+        The span stage is the one `span_kernel()` names. For a
+        dispatchable workspace (python dialect, and every cross-word
+        matcher has a space-free required literal) it is the mapInArrow
+        kernel (functions/arrow_spans.py): per-word span decompositions of
+        the word-local matchers are computed once per vocab word at plan
+        build and assembled a whole batch at a time in numpy; only the
+        rows holding every literal of some cross-word matcher go through
+        the exact text scanner, in the same batch. Any other workspace
+        runs the fused detokenize + generic text scanner UDF
+        (functions/spans.py) on every row. `token_tables` forces (True) or
+        disables (False) the word-table path; None = auto-detect.
+        `arrow_path=False` keeps the pandas UDFs: the word-table UDF for an
+        all-word-local workspace, else the generic extractor, so
+        `token_tables=True` with it raises ValueError on a workspace with
+        a cross-word matcher. `arrow_path=True`, `assembled=False` and
+        `with_text=False` need a dispatchable workspace with the
+        word-table path not disabled, and raise ValueError otherwise. All paths
+        produce identical results (tests/test_pipeline_e2e.py vs the
+        oracle; test_token_spans.py pins token-table == generic)."""
         if not fused:
             return self.routed(
                 self.enriched(self.parsed(seqs)), with_search=with_search
@@ -247,46 +277,59 @@ class LogPipeline:
         )
         from txtlogparser_spark.functions.token_spans import (
             make_token_fused_extractor,
-            matchers_word_local,
         )
 
-        use_tokens = (
-            matchers_word_local(filters, searches)
-            if token_tables is None
-            else token_tables
-        )
-        if self.ws.regex_dialect != "python":
+        kernel = self.span_kernel(with_search=with_search)
+        if self.ws.regex_dialect != "python" and token_tables:
             # the word-locality gate and per-word span tables analyze
             # Python `re` sre trees; under the ecmascript emulation the
             # generic fused extractor (which compiles via compile_ecma)
             # is the correct path
-            if token_tables:
-                raise ValueError(
-                    "token_tables=True is python-dialect only (the "
-                    "word-locality gate analyzes Python `re` ASTs); "
-                    f"workspace dialect is {self.ws.regex_dialect!r}"
-                )
-            use_tokens = False
+            raise ValueError(
+                "token_tables=True is python-dialect only (the "
+                "word-locality gate analyzes Python `re` ASTs); "
+                f"workspace dialect is {self.ws.regex_dialect!r}"
+            )
+        use_tokens = (
+            kernel.kind != "generic" if token_tables is None else token_tables
+        )
+        # why the word-table path cannot run, for the errors below
+        why = (
+            f"the workspace is not dispatchable ({kernel.reason})"
+            if kernel.kind == "generic"
+            else "token_tables=False"
+            if token_tables is False
+            else "arrow_path=False"
+        )
         if arrow_path and not use_tokens:
             # loud like token_tables=True / with_text=False: silently
             # falling back to the generic pandas path when the caller
-            # FORCED the zero-copy path would hide the word-locality (or
-            # dialect) reason the request cannot be honored
+            # FORCED the zero-copy path would hide the reason the
+            # request cannot be honored
             raise ValueError(
-                "arrow_path=True requires the token-table path (matchers "
-                "must be word-local and the dialect python); got "
-                f"use_tokens={use_tokens} — drop arrow_path or fix the "
-                "matchers"
+                "arrow_path=True requires a dispatchable workspace (python "
+                "dialect, every cross-word matcher with a space-free "
+                f"required literal) and token_tables not disabled; here: "
+                f"{why} — drop arrow_path or fix the matchers"
             )
         use_arrow = use_tokens if arrow_path is None else (arrow_path and use_tokens)
+        if token_tables and not use_arrow and kernel.kind != "word_table":
+            # the pandas word-table UDF has no row dispatch, so it serves
+            # only all-word-local workspaces; running the generic
+            # extractor instead would ignore the forced flag
+            raise ValueError(
+                "token_tables=True with arrow_path=False requires every "
+                "matcher to be word-local (the pandas word-table UDF has no "
+                f"row dispatch); here the span kernel is {kernel.kind!r}"
+            )
         if not use_arrow and not assembled:
             # flat f_*/s_* sink columns exist only on the mapInArrow path;
             # silently assembling instead would break flat-sink consumers
             # (e.g. filter_metrics_flat) with a missing-column error later
             raise ValueError(
-                "assembled=False requires the arrow token-table path "
-                "(matchers must be word-local and arrow_path must not be "
-                "disabled); got use_arrow=False"
+                "assembled=False requires the mapInArrow path: a "
+                "dispatchable workspace, with token_tables and arrow_path "
+                f"not disabled; here: {why}"
             )
         if use_arrow:
             # zero-copy batch path: flat span columns appended by
@@ -297,10 +340,6 @@ class LogPipeline:
                 StringType,
                 StructField,
                 StructType,
-            )
-
-            from txtlogparser_spark.functions.arrow_spans import (
-                make_arrow_span_mapper,
             )
 
             fn, _ = make_arrow_span_mapper(
@@ -336,7 +375,10 @@ class LogPipeline:
                     drop += ["s_start", "s_end", "s_id", "s_row"]
                 df = df.drop(*drop)
         else:
-            if use_tokens:
+            # the pandas token-table UDF has no row dispatch: a
+            # dispatched workspace under arrow_path=False takes the
+            # generic extractor here
+            if use_tokens and kernel.kind == "word_table":
                 fused_udf = make_token_fused_extractor(
                     self.vocab,
                     filters,
@@ -352,9 +394,10 @@ class LogPipeline:
                     # honoring with_text=False silently would change the
                     # sink schema depending on matcher shape
                     raise ValueError(
-                        "with_text=False requires the token-table path "
-                        "(word-local matchers); the generic extractor "
-                        "always materializes text"
+                        "with_text=False requires the word-table path: a "
+                        "dispatchable workspace, with token_tables and "
+                        f"arrow_path not disabled; here: {why} — the "
+                        "generic extractor always materializes text"
                     )
                 fused_udf = make_fused_extractor(
                     self.vocab, filters, searches, include_search=with_search,
