@@ -181,47 +181,33 @@ class TestPassthrough:
 
 
 class TestFusedPath:
-    def test_fused_and_unfused_agree(self, spark, fixture_dir):
+    def test_session_and_stream_agree_with_run(self, spark, fixture_dir, oracle_result):
+        """The session and the stream run `run()`'s plan: the same rows,
+        routes and spans as the oracle."""
+        from txtlogparser_spark.plans.session import WorkspaceSession
+        from txtlogparser_spark.streaming.stream import StreamingLogPipeline
+
         vocab = build_vocab()
         info = spark.read.parquet(f"{fixture_dir}/source_info.parquet")
         pipe = LogPipeline(spark, default_workspace(), vocab, source_info=info)
         seqs = pipe.load_sequences(f"{fixture_dir}/sequences")
-        a = pipe.run(seqs, fused=True)
-        b = pipe.run(seqs, fused=False)
-        ka = sorted(
-            (r["doc_id"], r["route"], tuple(map(tuple, r["filter_spans"])))
-            for r in a.select("doc_id", "route", "filter_spans").collect()
-        )
-        kb = sorted(
-            (r["doc_id"], r["route"], tuple(map(tuple, r["filter_spans"])))
-            for r in b.select("doc_id", "route", "filter_spans").collect()
-        )
-        assert ka == kb
-
-    def test_salted_repartition_preserves_results(self, spark, fixture_dir):
-        """Skew defusal (SURVEY.md §4 #2): the salted repartition before
-        the wide stages must not change routed rows, spans, or counts."""
-        vocab = build_vocab()
-        info = spark.read.parquet(f"{fixture_dir}/source_info.parquet")
-        plain = LogPipeline(spark, default_workspace(), vocab, source_info=info)
-        salted = LogPipeline(
-            spark, default_workspace(), vocab, source_info=info, salt_buckets=4
-        )
-        seqs = plain.load_sequences(f"{fixture_dir}/sequences")
         key = lambda df: sorted(
             (r["doc_id"], r["route"], tuple(map(tuple, r["filter_spans"])))
             for r in df.select("doc_id", "route", "filter_spans").collect()
         )
-        assert key(plain.run(seqs)) == key(salted.run(seqs))
-        ca = {
-            r["filter_id"]: (r["occurrence_count"], r["line_count"])
-            for r in plain.filter_counts(plain.run(seqs)).collect()
-        }
-        cb = {
-            r["filter_id"]: (r["occurrence_count"], r["line_count"])
-            for r in salted.filter_counts(salted.run(seqs)).collect()
-        }
-        assert ca == cb
+        want = key(pipe.run(seqs))
+        assert [d for d, _, _ in want] == sorted(
+            ol.rec.doc_id for ol in oracle_result.lines
+        )
+        sess = WorkspaceSession(
+            spark, vocab, seqs, [default_workspace()], source_info=info
+        )
+        try:
+            sess.set_active(default_workspace().id)
+            assert key(sess.routed()) == want
+        finally:
+            sess.close()
+        assert key(StreamingLogPipeline(pipe).routed_stream(seqs)) == want
 
     def test_token_prefilter_is_sound(self, spark, fixture_dir):
         # prefiltered row set ⊇ surviving row set, and counts identical
@@ -266,10 +252,12 @@ class TestEcmaDialectE2E:
         )
 
     @pytest.mark.parametrize("dialect", ["python", "ecmascript"])
-    @pytest.mark.parametrize("fused", [False, True])
+    @pytest.mark.parametrize("via_session", [False, True])
     def test_spark_matches_oracle_per_dialect(
-        self, spark, fixture_dir, dialect, fused
+        self, spark, fixture_dir, dialect, via_session
     ):
+        from txtlogparser_spark.plans.session import WorkspaceSession
+
         ws = self._ws(dialect)
         oracle = run_pipeline(_fixture_lines(), ws)
         info = spark.read.parquet(f"{fixture_dir}/source_info.parquet")
@@ -278,11 +266,21 @@ class TestEcmaDialectE2E:
             invalid_regex="match_nothing",
         )
         seqs = pipe.load_sequences(f"{fixture_dir}/sequences")
-        routed = pipe.run(seqs, fused=fused, with_search=False)
+        sess = WorkspaceSession(
+            spark, build_vocab(), seqs, [ws], source_info=info,
+            invalid_regex="match_nothing",
+        )
+        sess.set_active(ws.id)
+        routed = (
+            sess.routed(with_search=False)
+            if via_session
+            else pipe.run(seqs, with_search=False)
+        )
         got = {
             r["doc_id"]: spans_tuples(r["filter_spans"])
             for r in routed.select("doc_id", "filter_spans").collect()
         }
+        sess.close()
         want = {
             ol.rec.doc_id: [
                 (s.start, s.end, s.filter_id, s.search_id)
@@ -315,28 +313,6 @@ class TestEcmaDialectE2E:
             spark, ws, build_vocab(), invalid_regex="match_nothing"
         )  # loads
 
-    def test_ecma_prefilter_translates_before_rlike(self, spark):
-        # '\Z' is a literal 'Z' under the emulated ECMA grammar but an
-        # anchor to Java regex: the rlike prefilter must see the
-        # TRANSLATED pattern or it drops rows the matcher claims
-        import pyspark.sql.functions as F
-
-        from txtlogparser_spark.oracle.matcher import match_positions
-        from txtlogparser_spark.operators.route import survival_prefilter
-
-        spec = FilterSpec(601, 0, r"x\Z", regex=True)
-        assert match_positions(spec, "axZb", "ecmascript") == [(1, 3)]
-        df = spark.createDataFrame([("axZb",), ("nope",)], ["text"])
-        kept = [
-            r["text"]
-            for r in df.where(
-                survival_prefilter(
-                    [spec], F.col("text"), spark, dialect="ecmascript"
-                )
-            ).collect()
-        ]
-        assert kept == ["axZb"]
-
     def test_roundtrip_and_digest_stability(self):
         ws = self._ws("ecmascript")
         d = ws.to_dict()
@@ -349,10 +325,10 @@ class TestEcmaDialectE2E:
 
 
 def test_fused_rank_parity_when_filter_kills_a_source(spark):
-    """Degenerate no-source_info mode: the fused path enriches AFTER the
-    survival filter, so its rank dim must come from the PRE-filter frame
-    — a source whose rows all fail the filters must still occupy its
-    rank slot, keeping fused == non-fused (review finding)."""
+    """Degenerate no-source_info mode: `run()` enriches AFTER the survival
+    filter, so its rank dim must come from the PRE-filter frame — a
+    source whose rows all fail the filters must still occupy its rank
+    slot, as in the reference's file order."""
     from txtlogparser_spark.config import FilterSpec, WorkspaceConfig
     from txtlogparser_spark.plans.pipeline import LogPipeline
     from txtlogparser_spark.sources.fixtures import build_vocab
@@ -373,19 +349,22 @@ def test_fused_rank_parity_when_filter_kills_a_source(spark):
         filters=[FilterSpec(id=1, row=0, pattern=kw)], searches=[]
     )
     pipe = LogPipeline(spark, ws, vocab)  # no source_info => degenerate mode
-    fused = {
+    got = {
         (r["doc_id"], r["source_rank"])
         for r in pipe.run(seqs).select("doc_id", "source_rank").collect()
     }
-    unfused = {
-        (r["doc_id"], r["source_rank"])
-        for r in pipe.run(seqs, fused=False)
-        .select("doc_id", "source_rank")
-        .collect()
+    ranks = {"a": 0, "b": 1, "c": 2}  # lexicographic, every source counted
+    lines = [
+        LineRec(d, src, ranks[src], int(d.rsplit("-", 1)[1]), vocab[t[0]], tuple(t))
+        for d, t, _, src in rows
+    ]
+    want = {
+        (ol.rec.doc_id, ol.rec.source_rank)
+        for ol in run_pipeline(lines, ws).lines
     }
-    assert fused == unfused
+    assert got == want
     # 'a' holds rank 0 even though filtered out, so 'b' must be rank 1
-    assert all(rank == 1 for d, rank in fused if d.startswith("b"))
+    assert all(rank == 1 for d, rank in got if d.startswith("b"))
 
 
 def test_fused_prunes_unselected_sources_before_python(spark):
@@ -609,13 +588,15 @@ class TestSpanDispatch:
         assert sorted(r["doc_id"] for r in routed.select("doc_id").collect()) == sorted(
             ol.rec.doc_id for ol in oracle.lines
         )
-        for kw in ({"arrow_path": True}, {"assembled": False}, {"with_text": False}):
-            with pytest.raises(ValueError, match="dispatchable"):
+        reason = pipe.span_kernel().reason
+        for kw in ({"assembled": False}, {"with_text": False}):
+            with pytest.raises(ValueError) as err:
                 pipe.run(seqs, **kw)
+            assert reason and reason in str(err.value)
 
     def test_flags_accept_dispatchable_workspace(self, spark, fixture_dir):
-        """arrow_path=True, assembled=False and with_text=False run on a
-        dispatchable workspace; text is then built for scanner rows only."""
+        """assembled=False and with_text=False run on a dispatchable
+        workspace; text is then built for scanner rows only."""
         from txtlogparser_spark.operators.aggregate import filter_metrics_flat
 
         ws = _cross_word_ws(row=-1)
@@ -624,10 +605,9 @@ class TestSpanDispatch:
         pipe = LogPipeline(spark, ws, build_vocab(), source_info=info)
         seqs = pipe.load_sequences(f"{fixture_dir}/sequences")
         want_rows = sorted(ol.rec.doc_id for ol in oracle.lines)
-        for kw in ({"arrow_path": True}, {"with_text": False}):
-            routed = pipe.run(seqs, **kw)
-            assert ("text" in routed.columns) == ("with_text" not in kw)
-            assert sorted(r["doc_id"] for r in routed.select("doc_id").collect()) == want_rows
+        slim = pipe.run(seqs, with_text=False)
+        assert "text" not in slim.columns
+        assert sorted(r["doc_id"] for r in slim.select("doc_id").collect()) == want_rows
         flat = pipe.run(seqs, with_text=False, assembled=False)
         assert "text" not in flat.columns and "filter_spans" not in flat.columns
         assert "MapInArrow" in _executed_plan(flat)
@@ -639,13 +619,3 @@ class TestSpanDispatch:
             fid: (n, len(oracle.filter_line_map[fid]))
             for fid, n in oracle.filter_match_count.items()
         }
-        # the pandas path is still there when asked for
-        assert "ArrowEvalPython" in _executed_plan(pipe.run(seqs, arrow_path=False))
-        # ... but the pandas word-table UDF cannot serve this workspace,
-        # and a text-free sink then fails for arrow_path=False alone
-        with pytest.raises(ValueError, match="word-local"):
-            pipe.run(seqs, token_tables=True, arrow_path=False)
-        for kw in ({"with_text": False}, {"assembled": False}):
-            with pytest.raises(ValueError, match="here: arrow_path=False") as err:
-                pipe.run(seqs, arrow_path=False, **kw)
-            assert "not dispatchable" not in str(err.value)

@@ -367,63 +367,69 @@ def test_gate_admitted_random_asts_are_word_local(pat, data):
 
 
 def test_pipeline_paths_agree(spark, tmp_path):
-    """Spark-level: token-table plan == generic fused plan on fixture data."""
+    """Spark-level: every sink shape of `run()` (structs + text, no text,
+    flat) equals the oracle on fixture data with empty rows."""
+    from txtlogparser_spark.oracle import LineRec, run_pipeline
     from txtlogparser_spark.plans.pipeline import LogPipeline
     from txtlogparser_spark.sources.fixtures import (
         FixtureSpec,
         build_vocab,
         default_workspace,
+        generate_sequences,
+        generate_source_info,
         write_fixture_tables,
     )
 
     out = str(tmp_path / "fix")
-    # empty_fraction: ~2% of rows carry an EMPTY token array — all three
-    # paths must agree on the empty-line reference semantics too
-    write_fixture_tables(
-        out, FixtureSpec(n_rows=2000, n_sources=3, seed=11, empty_fraction=0.02)
-    )
+    # empty_fraction: ~2% of rows carry an EMPTY token array — every
+    # shape must keep the empty-line reference semantics too
+    spec = FixtureSpec(n_rows=2000, n_sources=3, seed=11, empty_fraction=0.02)
+    write_fixture_tables(out, spec)
+    vocab = build_vocab()
     info = spark.read.parquet(f"{out}/source_info.parquet")
     ws = default_workspace()
     assert matchers_word_local(ws.enabled_filters(), ws.enabled_searches())
-    pipe = LogPipeline(spark, ws, build_vocab(), source_info=info)
+    pipe = LogPipeline(spark, ws, vocab, source_info=info)
     seqs = pipe.load_sequences(f"{out}/sequences")
 
+    rank = {r["source"]: r["source_rank"] for r in generate_source_info(spec).to_pylist()}
+    lines = [
+        LineRec(
+            r["doc_id"], r["source"], rank[r["source"]],
+            int(r["doc_id"].rsplit("-", 1)[1]),
+            " ".join(vocab[t] for t in r["tokens"]), tuple(r["tokens"]),
+        )
+        for r in generate_sequences(spec).to_pylist()
+    ]
+    assert any(not ln.tokens for ln in lines)
+    oracle = run_pipeline(lines, ws)
+
+    def spans(rows):
+        return [(s["start"], s["end"], s["filter_id"], s["search_id"]) for s in rows]
+
     cols = ["doc_id", "text", "filter_spans", "search_spans", "route"]
-    fast = {
-        r["doc_id"]: r
-        for r in pipe.run(seqs, token_tables=True, arrow_path=False)
-        .select(cols)
-        .collect()
-    }
-    slow = {
-        r["doc_id"]: r
-        for r in pipe.run(seqs, token_tables=False).select(cols).collect()
-    }
-    arrow = {
-        r["doc_id"]: r
-        for r in pipe.run(seqs, token_tables=True, arrow_path=True)
-        .select(cols)
-        .collect()
-    }
-    assert set(fast) == set(slow) == set(arrow)
-    assert len(fast) > 0
-    for k in fast:
-        assert fast[k] == slow[k], f"row {k} differs (pandas-token vs generic)"
-        assert arrow[k] == slow[k], f"row {k} differs (arrow vs generic)"
+    full = {r["doc_id"]: r for r in pipe.run(seqs).select(cols).collect()}
+    order = {f.id: f.row for f in ws.enabled_filters()}
+    assert set(full) == {ol.rec.doc_id for ol in oracle.lines}
+    for ol in oracle.lines:
+        r = full[ol.rec.doc_id]
+        assert r["text"] == ol.rec.text
+        assert spans(r["filter_spans"]) == spans(s.__dict__ for s in ol.filter_spans)
+        assert spans(r["search_spans"]) == spans(s.__dict__ for s in ol.search_spans)
+        claimed = {s.filter_id for s in ol.filter_spans if s.filter_id != -1}
+        assert r["route"] == min(claimed, key=order.__getitem__)
 
     # with_text=False: same spans/route, text reconstructible on demand
-    slim = pipe.run(seqs, token_tables=True, with_text=False)
+    slim = pipe.run(seqs, with_text=False)
     assert "text" not in slim.columns
     redone = {
         r["doc_id"]: r
         for r in pipe.display_text(slim).select(cols).collect()
     }
-    assert set(redone) == set(fast)
-    for k in fast:
-        assert redone[k] == fast[k], f"slim row {k} differs"
+    assert redone == full
 
     # flat sink shape (assembled=False): same survival/routes, and the
-    # flat metrics equal the assembled metrics
+    # flat metrics equal the assembled metrics and the oracle's counts
     from txtlogparser_spark.operators.aggregate import (
         filter_metrics,
         filter_metrics_flat,
@@ -436,48 +442,73 @@ def test_pipeline_paths_agree(spark, tmp_path):
     routes_flat = sorted(
         (r["doc_id"], r["route"]) for r in flat.select("doc_id", "route").collect()
     )
-    routes_asm = sorted((k, fast[k]["route"]) for k in fast)
-    assert routes_flat == routes_asm
-    asm = pipe.run(seqs, with_text=False)
-    fm = {r["filter_id"]: (r["occurrence_count"], r["line_count"])
-          for r in filter_metrics(asm).collect()}
-    fmf = {r["filter_id"]: (r["occurrence_count"], r["line_count"])
-           for r in filter_metrics_flat(flat).collect()}
-    assert fm == fmf
-    sm = {r["search_id"]: (r["occurrence_count"], r["line_count"])
-          for r in search_metrics(asm).collect()}
-    smf = {r["search_id"]: (r["occurrence_count"], r["line_count"])
-           for r in search_metrics_flat(flat).collect()}
-    assert sm == smf
+    assert routes_flat == sorted((k, r["route"]) for k, r in full.items())
+
+    def counts(df, key):
+        return {
+            r[key]: (r["occurrence_count"], r["line_count"]) for r in df.collect()
+        }
+
+    fm = counts(filter_metrics(slim), "filter_id")
+    assert fm == counts(filter_metrics_flat(flat), "filter_id")
+    assert fm == {
+        fid: (n, len(oracle.filter_line_map[fid]))
+        for fid, n in oracle.filter_match_count.items()
+    }
+    sm = counts(search_metrics(slim), "search_id")
+    assert sm == counts(search_metrics_flat(flat), "search_id")
+    assert sm == {
+        sid: (n, len(oracle.search_line_map[sid]))
+        for sid, n in oracle.search_match_count.items()
+    }
 
 
-def test_forced_arrow_path_raises_when_not_word_local(spark, tmp_path):
-    """Review finding: run(arrow_path=True) with non-word-local matchers
-    silently fell back to the generic pandas path; every other force
-    flag raises loudly in its impossible configuration — this one now
-    does too."""
+def test_generic_workspace_flags_raise_with_reason(spark, tmp_path):
+    """A phrase matcher has no space-free literal, so the workspace runs
+    the generic kernel: `run()` matches the oracle there, and the flags
+    only the mapInArrow kernel can honor raise, naming the reason."""
     import pytest as _pytest
 
     from txtlogparser_spark.config import FilterSpec, WorkspaceConfig
+    from txtlogparser_spark.oracle import LineRec, run_pipeline
     from txtlogparser_spark.plans.pipeline import LogPipeline
     from txtlogparser_spark.sources.fixtures import (
         FixtureSpec,
         build_vocab,
+        generate_sequences,
         write_fixture_tables,
     )
 
+    spec = FixtureSpec(n_rows=200, n_sources=2, seed=7)
     out = str(tmp_path / "fix")
-    write_fixture_tables(out, FixtureSpec(n_rows=200, n_sources=2, seed=7))
-    info = spark.read.parquet(f"{out}/source_info.parquet")
-    # a multi-word phrase matcher is not word-local
-    ws = WorkspaceConfig(id=1, name="w", filters=[FilterSpec(201, 0, "big batch")])
+    write_fixture_tables(out, spec)
+    vocab = build_vocab()
+    rows = generate_sequences(spec).to_pylist()
+    # a multi-word phrase matcher is not word-local; take one the data holds
+    phrase = next(
+        " ".join(vocab[t] for t in r["tokens"][:2])
+        for r in rows
+        if len(r["tokens"]) > 1
+    )
+    ws = WorkspaceConfig(id=1, name="w", filters=[FilterSpec(201, 0, phrase)])
     assert not matchers_word_local(ws.enabled_filters(), [])
-    pipe = LogPipeline(spark, ws, build_vocab(), source_info=info)
+    pipe = LogPipeline(spark, ws, vocab)
+    kernel = pipe.span_kernel(with_search=False)
+    assert kernel.kind == "generic" and kernel.reason
     seqs = pipe.load_sequences(f"{out}/sequences")
-    with _pytest.raises(ValueError, match="arrow_path=True requires"):
-        pipe.run(seqs, arrow_path=True, with_search=False)
-    # unforced: the gate quietly picks the generic path and still runs
-    assert pipe.run(seqs, with_search=False).count() >= 0
+    for kw in ({"with_text": False}, {"assembled": False}):
+        with _pytest.raises(ValueError) as err:
+            pipe.run(seqs, with_search=False, **kw)
+        assert kernel.reason in str(err.value)
+    got = sorted(
+        r["doc_id"] for r in pipe.run(seqs, with_search=False).select("doc_id").collect()
+    )
+    lines = [
+        LineRec(r["doc_id"], r["source"], 0, 0, " ".join(vocab[t] for t in r["tokens"]))
+        for r in rows
+    ]
+    assert got == sorted(ol.rec.doc_id for ol in run_pipeline(lines, ws).lines)
+    assert got
 
 
 def test_empty_rows_through_spark_and_arrow_paths(spark):

@@ -100,9 +100,9 @@ def test_unknown_and_duplicate_ids(spark):
 def test_match_nothing_session_parses_and_mutates(spark):
     """Review finding: a session constructed with
     invalid_regex='match_nothing' still re-validated under the default
-    'reject' in two places — parsed()'s base pipeline (first workspace
-    arbitrary) and update_workspace — so one reference-invalid regex
-    made the session unusable / immutable."""
+    'reject' in two places — the parse stage's pipeline (built from the
+    first workspace) and update_workspace — so one reference-invalid
+    regex made the session unusable / immutable."""
     bad = WorkspaceConfig(
         id=1,
         name="bad",
@@ -113,8 +113,8 @@ def test_match_nothing_session_parses_and_mutates(spark):
         spark,
         VOCAB,
         _seqs(spark),
-        # the invalid-regex workspace FIRST so parsed()'s base pipeline
-        # validates it
+        # the invalid-regex workspace FIRST, where the old parse stage's
+        # pipeline validated it
         [bad, good],
         invalid_regex="match_nothing",
     )

@@ -54,7 +54,8 @@ Semantics are identical to token_spans (same word tables, same assembly
 rules as spans_for_ids) and to the generic extractor;
 tests/test_token_spans.py pins the mapper against both. `text` is the
 joined line BEFORE the detokenizer's \\r scrub, and spans are offsets into
-it — see plans/pipeline.py for how that differs from the non-fused path.
+it — plans/pipeline.py documents this as the one deliberate divergence
+from the reference.
 """
 
 from __future__ import annotations

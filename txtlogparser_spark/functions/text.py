@@ -176,10 +176,6 @@ def min_kgram_hash(text_col: str = "text", k: int = 8) -> Column:
     )
 
 
-def doc_fingerprint(text_col: str = "text", length: int = 16) -> Column:
-    return F.substring(F.md5(F.col(text_col)), 1, length)
-
-
 def duplicate_word_fraction(text_col: str = "text") -> Column:
     """Fraction of word occurrences that are repeats of an earlier word
     (1 - distinct/total). The word-level form of the repetition filters

@@ -3,7 +3,8 @@
 Reference walks an ordered per-filter line set with upper/lower_bound and
 wraparound (OutputData.cpp:526-758). Batch analog: the routed sink already
 holds every claimed span; navigation is two cheap aggregations over a
-matches table (`min WHERE key > cur`, else global `min` for the wrap) —
+matches table of (matcher_id, output_index, start, end) rows, one per
+claimed span (`min WHERE key > cur`, else global `min` for the wrap) —
 served from a materialized matches sink at scale, partition-pruned by
 filter_id, never a full scan of the fact table.
 
@@ -20,39 +21,6 @@ from typing import Optional, Tuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
-
-from txtlogparser_spark.operators.windowing import with_global_index
-
-
-def with_output_index(routed: DataFrame) -> DataFrame:
-    """Dense 0-based output index over the global order (source_rank,
-    line_no) ↔ position in m_outputLinesAfterFilters.
-
-    Scale shape: per-source row_number (parallel, partitioned window) +
-    broadcast per-source cumulative offsets — no single-partition window
-    (operators/windowing.with_global_index). The fact table is never
-    funneled through one task; only a K-row source dim is."""
-    return with_global_index(
-        routed, "source_rank", ["line_no"], out="output_index"
-    )
-
-
-def matches_table(
-    indexed: DataFrame, spans_col: str = "filter_spans", by_search: bool = False
-) -> DataFrame:
-    """Explode claimed spans → (matcher_id, output_index, start, end)."""
-    key = "search_id" if by_search else "filter_id"
-    sp = F.explode(spans_col).alias("sp")
-    return (
-        indexed.select("output_index", sp)
-        .where(F.col(f"sp.{key}") != -1)
-        .select(
-            F.col(f"sp.{key}").alias("matcher_id"),
-            "output_index",
-            F.col("sp.start").alias("start"),
-            F.col("sp.end").alias("end"),
-        )
-    )
 
 
 def _nav_pick(m: DataFrame, cls, agg) -> Optional[Tuple[int, int, int]]:

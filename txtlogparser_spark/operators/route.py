@@ -4,10 +4,15 @@ The reference's row-survival rule is OR-semantics over enabled filters
 (OutputData.cpp:308-329). We split it into two layers:
 
 1. `survival_prefilter` — a COARSE, Catalyst-native necessary condition
-   (substring containment / rlike) that Catalyst pushes toward the scan.
-   It may keep rows the exact matcher later rejects (e.g. whole-word
-   boundary failures) but never drops a surviving row. At 10^12-row scale
-   this prunes the bulk of the data before the Python stage.
+   (substring containment of the pattern, or of a regex's required
+   literals) that Catalyst pushes toward the scan. It may keep rows the
+   exact matcher later rejects (e.g. whole-word boundary failures) but
+   never drops a surviving row. It reads each regex with Python `re`
+   semantics, the matcher's, and never hands the pattern to Java regex:
+   `rlike` disagrees with `re` on non-ASCII text (ASCII-only \\w, \\d,
+   \\s and case folding; `.` stops at U+2028), so it would drop rows.
+   At 10^12-row scale this prunes the bulk of the data before the Python
+   stage.
 2. the exact span UDF (functions/spans.py) + `exists(filter_spans,
    s -> s.filter_id != -1)` — the precise survival decision, JVM-side over
    the UDF output.
@@ -21,83 +26,67 @@ boolean per-filter hit columns cover multi-membership.
 
 from __future__ import annotations
 
+import re
 from typing import Optional, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, SparkSession
 
 from txtlogparser_spark.config import FilterSpec
+from txtlogparser_spark.functions.spans import _required_literals
 from txtlogparser_spark.oracle.matcher import ascii_lower
 
-
-def _java_regex_ok(spark: Optional[SparkSession], pattern: str) -> bool:
-    """Check a pattern also compiles as a Java regex so `rlike` can serve as
-    a coarse prefilter; on failure we skip the prefilter for that filter
-    (correctness unaffected — the exact UDF decides)."""
-    if spark is None:
-        return False
-    try:
-        spark._jvm.java.util.regex.Pattern.compile(pattern)  # noqa: SLF001
-        return True
-    except Exception:
-        return False
+_UPPER = "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
+_LOWER = "abcdefghijklmnopqrstuvwxyz"
+# the only non-ASCII characters re.IGNORECASE matches to an ASCII one:
+# U+0130 and U+0131 to i, the long s to s, the Kelvin sign to k
+_RE_FOLD_FROM, _RE_FOLD_TO = "\u0130\u0131\u017f\u212a", "iisk"
 
 
-def _necessary_condition(
-    f: FilterSpec,
-    text_col: Column,
-    spark: Optional[SparkSession],
-    dialect: str = "python",
-) -> Column:
+def _necessary_condition(f: FilterSpec, text_col: Column) -> Column:
     if not f.regex:
         # substring containment is an exact necessary condition for the
         # greedy scan (whole-word only rejects candidates, never adds)
         if f.caseSensitive:
             return text_col.contains(F.lit(f.pattern))
-        # ASCII case-fold (FilterData.cpp:114-117). Spark lower() is
-        # Unicode-aware but cannot produce false negatives for an
-        # ASCII-folded pattern, so it is a safe necessary condition.
-        return F.lower(text_col).contains(F.lit(ascii_lower(f.pattern)))
-    pat = f.pattern
-    if f.wholeWord:
-        pat = r"\b" + pat + r"\b"
-    if dialect == "ecmascript":
-        # rlike must see the TRANSLATED pattern: e.g. '\Z' is a literal
-        # 'Z' under the emulated grammar but an anchor to Java regex —
-        # prefiltering on the raw pattern could drop rows the matcher
-        # claims. Post-translation, Java semantics are a superset of the
-        # emulated Python semantics for every rewritten construct
-        # (Java \Z ⊇ Python \Z, ASCII \w/\b/icase match, escaped braces
-        # and [^\s\S]/[\s\S] classes are literal-identical), so the
-        # condition stays sound-necessary. ECMA-rejected patterns claim
-        # nothing — lit(True) is trivially sound for them.
-        from txtlogparser_spark.functions.regex_dialect import ecma_to_python
-
-        try:
-            pat = ecma_to_python(pat)
-        except ValueError:
-            return F.lit(True)
-    if not f.caseSensitive:
-        pat = "(?i)" + pat
-    if _java_regex_ok(spark, pat):
-        return text_col.rlike(pat)
-    return F.lit(True)
+        # exactly the reference's per-byte ASCII fold (FilterData.cpp:
+        # 114-117); lower() maps U+0130 to two characters and would drop
+        # the line "\u0130x ok" that the pattern "\u0130x" claims
+        return F.translate(text_col, _UPPER, _LOWER).contains(
+            F.lit(ascii_lower(f.pattern))
+        )
+    # every match holds each top-level literal run of the pattern
+    creg = f.compiled()
+    lits = [lit for lit in _required_literals(creg.pattern) if lit]
+    if creg.flags & re.IGNORECASE:
+        # a folded ASCII literal matches ASCII case variants and the four
+        # characters above; translate() maps them all onto the literal's
+        # lowercase, one character for one, so offsets do not move
+        text_col = F.translate(
+            text_col, _UPPER + _RE_FOLD_FROM, _LOWER + _RE_FOLD_TO
+        )
+        lits = [ascii_lower(lit) for lit in lits if lit.isascii()]
+    cond = F.lit(True)
+    for lit in lits:
+        cond = cond & text_col.contains(F.lit(lit))
+    return cond
 
 
 def survival_prefilter(
     filters: Sequence[FilterSpec],
     text_col: Column,
     spark: Optional[SparkSession] = None,
-    dialect: str = "python",
 ) -> Column:
     """OR of per-filter necessary conditions; `lit(True)` when no filters
-    are enabled (pass-through semantics, OutputData.cpp:323-329)."""
+    are enabled (pass-through semantics, OutputData.cpp:323-329). Python
+    dialect. `spark` is accepted for existing callers; the condition
+    needs no JVM-side check."""
     enabled = [f for f in filters if f.enabled]
     if not enabled:
         return F.lit(True)
-    cond = _necessary_condition(enabled[0], text_col, spark, dialect)
+    cond = _necessary_condition(enabled[0], text_col)
     for f in enabled[1:]:
-        cond = cond | _necessary_condition(f, text_col, spark, dialect)
+        cond = cond | _necessary_condition(f, text_col)
     return cond
 
 

@@ -1,14 +1,18 @@
-"""End-to-end pipeline assembly: parse → enrich → route → aggregate.
+"""End-to-end pipeline assembly: scan → span stage → enrich → route → aggregate.
 
 Declarative plan construction — every stage returns a lazy DataFrame so
 Catalyst fuses the whole run into one optimized plan per action (the
 reference's pause/resume recompute-coalescing, OutputData.cpp:233-255,
 falls out of lazy evaluation for free).
 
-Stage order of the launcher's plan, `run()` (fused, the default):
+`LogPipeline.run` is the one plan. The workspace session
+(plans/session.py) and the stream (streaming/stream.py) run it too. It is
+`route(scan(seqs))`, split where the plan stops depending on the
+workspace:
 
-  scan (source-pruned, column-pruned)          # S2 IN predicate pushed down
-    → token survival prefilter (JVM)           # on token ids, before Python
+  scan():  scan (source-pruned, column-pruned) # S2 IN predicate pushed down
+           + line_no from doc_id
+  route(): token survival prefilter (JVM)      # on token ids, before Python
     → ONE span stage (Arrow, the only Python stage), per span_kernel():
         word_table (every matcher word-local,  mapInArrow word-table kernel
           python dialect):                     (functions/arrow_spans.py)
@@ -26,17 +30,12 @@ Stage order of the launcher's plan, `run()` (fused, the default):
   display page: top-N by (source_rank, line_no) # one TakeOrderedAndProject
                                                # when the sink stores text
 
-`run(fused=False)` (also the streaming and workspace-session chain) is
-parsed → enriched → routed: detokenize (Arrow UDF) → coarse text
-prefilter (Catalyst) → span UDF → the same survival / enrich / route.
-
-Known divergence, kept deliberately: the detokenizer applies the
-reference's \\r line scrub (OutputData.cpp:78-90), so `parsed()` scrubs the
-text BEFORE spans are computed, while the fused span stage computes spans
-on, and stores, the text as joined, before any scrub. The two paths agree
-whenever no vocab word holds a \\r (every generated fixture). Only the
-display page corrects for it: `display_text` re-detokenizes, scrub
-included, when the vocab holds a \\r.
+One divergence from the reference, kept deliberately: its \\r line scrub
+(OutputData.cpp:78-90). Spans are computed on, and `text` stores, the line
+as joined from the vocab, before any scrub; `display_text` applies the
+scrub when it renders a page. sources/textlog.py scrubs lines at ingest,
+so only an externally supplied vocab can hold a \\r; on any other vocab
+the two agree.
 """
 
 from __future__ import annotations
@@ -45,6 +44,13 @@ from typing import Optional, Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from txtlogparser_spark.config import WorkspaceConfig
 from txtlogparser_spark.functions.arrow_spans import (
@@ -56,11 +62,7 @@ from txtlogparser_spark.functions.detokenize import (
     has_carriage_return,
     make_detokenizer,
 )
-from txtlogparser_spark.functions.spans import (
-    assemble_spans,
-    attach_spans,
-    make_fused_extractor,
-)
+from txtlogparser_spark.functions.spans import assemble_spans, make_fused_extractor
 from txtlogparser_spark.functions.token_prefilter import token_survival_prefilter
 from txtlogparser_spark.operators.aggregate import filter_metrics, search_metrics
 from txtlogparser_spark.operators.enrich import (
@@ -69,9 +71,29 @@ from txtlogparser_spark.operators.enrich import (
 )
 from txtlogparser_spark.operators.route import (
     filter_predicate,
+    filter_predicate_flat,
     route_tag_column,
-    survival_prefilter,
+    route_tag_flat,
 )
+
+
+def scan(seqs: DataFrame, selected: Optional[Sequence[str]] = None) -> DataFrame:
+    """The workspace-independent head of `LogPipeline.run`.
+
+    S2 pruning comes first: keeping only the `selected` sources
+    (operators/enrich.py::selected_sources) is a pushed-down IN predicate
+    on the partition column, so it sits below the (opaque, push-blocking)
+    Python span stage and unselected partitions are never scanned or
+    span-extracted. line_no comes from doc_id ('{source}-{line_no:08d}',
+    FIXTURES.md §1)."""
+    if selected is not None:
+        seqs = seqs.where(F.col("source").isin(selected))
+    # long, not int: at the designed 10^12-sequence scale a source can
+    # exceed 2^31 lines, and the non-ANSI string->int cast would silently
+    # NULL line_no past that (breaking the total order)
+    return seqs.withColumn(
+        "line_no", F.substring_index("doc_id", "-", -1).cast("long")
+    )
 
 
 class LogPipeline:
@@ -85,7 +107,6 @@ class LogPipeline:
         vocab: Sequence[str],
         source_info: Optional[DataFrame] = None,
         *,
-        salt_buckets: int = 0,
         invalid_regex: str = "reject",
     ) -> None:
         self.spark = spark
@@ -95,9 +116,6 @@ class LogPipeline:
         self.ws = workspace.validate(invalid_regex=invalid_regex)
         self.vocab = list(vocab)
         self.source_info = source_info
-        # salted repartition width for hot-source skew (SURVEY.md §4 #2);
-        # 0 = rely on AQE skew handling only
-        self.salt_buckets = salt_buckets
         self._detok = make_detokenizer(self.vocab)
         # stored text equals the detokenizer's output unless its \r
         # scrub can change it (see the module docstring)
@@ -110,86 +128,6 @@ class LogPipeline:
         source predicate is present."""
         return self.spark.read.parquet(path)
 
-    # ---- stages ----
-    def _salted(self, df: DataFrame) -> DataFrame:
-        """Explicit skew defusal: spread each hot source over N buckets
-        before wide downstream stages while keeping source locality.
-        Shared by the fused and non-fused paths so the strategy cannot
-        drift between them."""
-        if self.salt_buckets > 0:
-            df = df.repartition(
-                F.col("source"),
-                F.pmod(F.xxhash64("doc_id"), F.lit(self.salt_buckets)),
-            )
-        return df
-
-    def parsed(self, seqs: DataFrame) -> DataFrame:
-        """Detokenize + derive line_no from doc_id ('{source}-{line_no:08d}',
-        FIXTURES.md §1). Column-pruned: only needed cols pass on."""
-        df = self._salted(seqs)
-        # long, not int: at the designed 10^12-sequence scale a source
-        # can exceed 2^31 lines, and the non-ANSI string->int cast would
-        # silently NULL line_no past that (breaking the total order)
-        return df.withColumn(
-            "line_no",
-            F.substring_index("doc_id", "-", -1).cast("long"),
-        ).withColumn("text", self._detok(F.col("tokens")))
-
-    def enriched(
-        self,
-        parsed: DataFrame,
-        rank_basis: Optional[DataFrame] = None,
-        selected: Optional[Sequence[str]] = None,
-    ) -> DataFrame:
-        """Broadcast enrich with source_rank/payload; prune unselected
-        sources (S2) before anything expensive.
-
-        `rank_basis` (degenerate no-dim mode only): frame whose sources
-        define the rank dim. The fused path enriches AFTER the survival
-        filter, so it must pass its PRE-filter frame here — otherwise a
-        source whose rows all fail the filters would shift every later
-        source's rank and diverge from the non-fused path."""
-        if self.source_info is None:
-            # degenerate no-dim mode: rank sources lexicographically from a
-            # distributed K-row aggregate — no driver-side .collect() on the
-            # fact table, no unpartitioned window (windowing.ordered_partition_dim)
-            from txtlogparser_spark.operators.windowing import (
-                ordered_partition_dim,
-            )
-
-            basis = rank_basis if rank_basis is not None else parsed
-            ranks = ordered_partition_dim(
-                basis.select("source"), "source"
-            ).select("source", F.col("_rank").alias("source_rank"))
-            return parsed.join(F.broadcast(ranks), "source", "inner")
-        return enrich_with_sources(parsed, self.source_info, selected=selected)
-
-    def routed(self, enriched: DataFrame, *, with_search: bool = True) -> DataFrame:
-        """Coarse prefilter → span UDF → exact OR-survival → route tag."""
-        filters = self.ws.enabled_filters()
-        searches = self.ws.enabled_searches() if with_search else []
-        pre = survival_prefilter(
-            filters, F.col("text"), self.spark, dialect=self.ws.regex_dialect
-        )
-        df = enriched.where(pre)
-        # rlike-based prefilter stays a sound necessary condition under
-        # the ecmascript dialect: Java regex semantics are a superset of
-        # the emulated ECMA semantics for every translated construct,
-        # and Java-invalid patterns fall back to lit(True)
-        df = attach_spans(
-            df, "text", filters, searches, include_search=with_search,
-            dialect=self.ws.regex_dialect,
-        )
-        if filters:
-            df = df.where(filter_predicate(F.col("filter_spans")))
-            df = df.withColumn(
-                "route", route_tag_column(filters, F.col("filter_spans"))
-            )
-        else:
-            # no enabled filters ⇒ pass-through (OutputData.cpp:323-329)
-            df = df.withColumn("route", F.lit(-1))
-        return df
-
     # ---- aggregates (A1-A3) ----
     def filter_counts(self, routed: DataFrame) -> DataFrame:
         return filter_metrics(routed)
@@ -197,10 +135,10 @@ class LogPipeline:
     def search_counts(self, routed: DataFrame) -> DataFrame:
         return search_metrics(routed)
 
-    # ---- one-call plan ----
+    # ---- the plan ----
     def span_kernel(self, *, with_search: bool = True) -> SpanKernel:
-        """The span kernel `run()` uses for this workspace with its
-        default flags, and why (functions/arrow_spans.py::SpanKernel)."""
+        """The span kernel `run()` uses for this workspace, and why
+        (functions/arrow_spans.py::SpanKernel)."""
         return span_kernel(
             self.ws.enabled_filters(),
             self.ws.enabled_searches() if with_search else [],
@@ -212,136 +150,85 @@ class LogPipeline:
         seqs: DataFrame,
         *,
         with_search: bool = True,
-        fused: bool = True,
-        token_tables: Optional[bool] = None,
         with_text: bool = True,
-        arrow_path: Optional[bool] = None,
         assembled: bool = True,
     ) -> DataFrame:
-        """Full plan. `fused=True` (default) uses the scale path:
-
-        token-level JVM prefilter (no detokenize needed to prune)
-          → ONE span stage (Arrow)
-          → JVM survival / enrich / route.
-
-        The span stage is the one `span_kernel()` names. For a
-        dispatchable workspace (python dialect, and every cross-word
-        matcher has a space-free required literal) it is the mapInArrow
-        kernel (functions/arrow_spans.py): per-word span decompositions of
-        the word-local matchers are computed once per vocab word at plan
-        build and assembled a whole batch at a time in numpy; only the
-        rows holding every literal of some cross-word matcher go through
-        the exact text scanner, in the same batch. Any other workspace
-        runs the fused detokenize + generic text scanner UDF
-        (functions/spans.py) on every row. `token_tables` forces (True) or
-        disables (False) the word-table path; None = auto-detect.
-        `arrow_path=False` keeps the pandas UDFs: the word-table UDF for an
-        all-word-local workspace, else the generic extractor, so
-        `token_tables=True` with it raises ValueError on a workspace with
-        a cross-word matcher. `arrow_path=True`, `assembled=False` and
-        `with_text=False` need a dispatchable workspace with the
-        word-table path not disabled, and raise ValueError otherwise. All paths
-        produce identical results (tests/test_pipeline_e2e.py vs the
-        oracle; test_token_spans.py pins token-table == generic)."""
-        if not fused:
-            return self.routed(
-                self.enriched(self.parsed(seqs)), with_search=with_search
-            )
-        filters = self.ws.enabled_filters()
-        searches = self.ws.enabled_searches() if with_search else []
-
-        df = seqs
-        # S2 pruning FIRST: the unselected-source filter is a pushed-down
-        # IN predicate on the partition column — it must sit below the
-        # salt repartition and the (opaque, push-blocking) Python span
-        # stage, or unselected partitions get scanned, shuffled, and
-        # span-extracted only to be dropped by the enrich join at the end
-        _sel = (
+        """The full plan, `route(scan(seqs))` (see the module docstring)."""
+        selected = (
             selected_sources(self.source_info)
             if self.source_info is not None
             else None
         )
-        if _sel is not None:
-            df = df.where(F.col("source").isin(_sel))
-        df = self._salted(df)
-        # rank basis for degenerate mode = every parsed row, BEFORE any
-        # survival filtering (parity with the non-fused path)
-        _rank_basis = df
+        return self.route(
+            scan(seqs, selected),
+            selected=selected,
+            with_search=with_search,
+            with_text=with_text,
+            assembled=assembled,
+        )
+
+    def route(
+        self,
+        scanned: DataFrame,
+        *,
+        with_search: bool = True,
+        with_text: bool = True,
+        assembled: bool = True,
+        selected: Optional[Sequence[str]] = None,
+    ) -> DataFrame:
+        """The workspace part of `run()`, over a frame `scan()` built with
+        this pipeline's source_info. `selected` is the source list `scan()`
+        kept; passing it spares the enrich a second collect of the dim.
+
+        token-level JVM prefilter (no detokenize needed to prune)
+          → ONE span stage (Arrow), the one `span_kernel()` names
+          → JVM survival / enrich / route.
+
+        The mapInArrow kernel (functions/arrow_spans.py) serves word_table
+        and dispatched workspaces: per-word span decompositions of the
+        word-local matchers are computed once per vocab word at plan build
+        and assembled a whole batch at a time in numpy; only the rows
+        holding every literal of some cross-word matcher go through the
+        exact text scanner, in the same batch. A generic workspace runs
+        the fused detokenize + text scanner UDF (functions/spans.py) on
+        every row.
+
+        `with_text=False` leaves out `text`; `assembled=False` keeps the
+        flat f_*/s_* int-list columns instead of the filter_spans /
+        search_spans structs. Both need the mapInArrow kernel, and raise
+        ValueError on a generic workspace."""
+        filters = self.ws.enabled_filters()
+        searches = self.ws.enabled_searches() if with_search else []
+        kernel = self.span_kernel(with_search=with_search)
+        if kernel.kind == "generic" and not (with_text and assembled):
+            # the generic extractor always materializes text and emits no
+            # flat sink columns; honoring either flag silently would change
+            # the sink schema depending on matcher shape
+            raise ValueError(
+                "with_text=False and assembled=False need the mapInArrow "
+                f"kernel; this workspace runs the generic one: {kernel.reason}"
+            )
+
+        df = scanned
         tok_pre = token_survival_prefilter(
             filters, self.vocab, dialect=self.ws.regex_dialect
         )
         if tok_pre is not None:
             df = df.where(tok_pre)
-        df = df.withColumn(
-            "line_no", F.substring_index("doc_id", "-", -1).cast("long")
-        )
-        from txtlogparser_spark.functions.token_spans import (
-            make_token_fused_extractor,
-        )
-
-        kernel = self.span_kernel(with_search=with_search)
-        if self.ws.regex_dialect != "python" and token_tables:
-            # the word-locality gate and per-word span tables analyze
-            # Python `re` sre trees; under the ecmascript emulation the
-            # generic fused extractor (which compiles via compile_ecma)
-            # is the correct path
-            raise ValueError(
-                "token_tables=True is python-dialect only (the "
-                "word-locality gate analyzes Python `re` ASTs); "
-                f"workspace dialect is {self.ws.regex_dialect!r}"
+        flat_cols = ["f_start", "f_end", "f_id", "f_row"]
+        if with_search:
+            flat_cols += ["s_start", "s_end", "s_id", "s_row"]
+        if kernel.kind == "generic":
+            fused_udf = make_fused_extractor(
+                self.vocab, filters, searches, include_search=with_search,
+                dialect=self.ws.regex_dialect,
             )
-        use_tokens = (
-            kernel.kind != "generic" if token_tables is None else token_tables
-        )
-        # why the word-table path cannot run, for the errors below
-        why = (
-            f"the workspace is not dispatchable ({kernel.reason})"
-            if kernel.kind == "generic"
-            else "token_tables=False"
-            if token_tables is False
-            else "arrow_path=False"
-        )
-        if arrow_path and not use_tokens:
-            # loud like token_tables=True / with_text=False: silently
-            # falling back to the generic pandas path when the caller
-            # FORCED the zero-copy path would hide the reason the
-            # request cannot be honored
-            raise ValueError(
-                "arrow_path=True requires a dispatchable workspace (python "
-                "dialect, every cross-word matcher with a space-free "
-                f"required literal) and token_tables not disabled; here: "
-                f"{why} — drop arrow_path or fix the matchers"
-            )
-        use_arrow = use_tokens if arrow_path is None else (arrow_path and use_tokens)
-        if token_tables and not use_arrow and kernel.kind != "word_table":
-            # the pandas word-table UDF has no row dispatch, so it serves
-            # only all-word-local workspaces; running the generic
-            # extractor instead would ignore the forced flag
-            raise ValueError(
-                "token_tables=True with arrow_path=False requires every "
-                "matcher to be word-local (the pandas word-table UDF has no "
-                f"row dispatch); here the span kernel is {kernel.kind!r}"
-            )
-        if not use_arrow and not assembled:
-            # flat f_*/s_* sink columns exist only on the mapInArrow path;
-            # silently assembling instead would break flat-sink consumers
-            # (e.g. filter_metrics_flat) with a missing-column error later
-            raise ValueError(
-                "assembled=False requires the mapInArrow path: a "
-                "dispatchable workspace, with token_tables and arrow_path "
-                f"not disabled; here: {why}"
-            )
-        if use_arrow:
+            df = df.withColumn("_flat", fused_udf(F.col("tokens")))
+            df = df.withColumn("text", F.col("_flat.text"))
+            spans_from, drop = "_flat", ["_flat"]
+        else:
             # zero-copy batch path: flat span columns appended by
             # mapInArrow, structs assembled JVM-side from top level
-            from pyspark.sql.types import (
-                ArrayType,
-                IntegerType,
-                StringType,
-                StructField,
-                StructType,
-            )
-
             fn, _ = make_arrow_span_mapper(
                 self.vocab,
                 filters,
@@ -350,93 +237,62 @@ class LogPipeline:
                 include_text=with_text,
             )
             arr = ArrayType(IntegerType(), False)
-            extra = [
-                StructField(n, arr, False)
-                for n in ("f_start", "f_end", "f_id", "f_row")
-            ]
-            if with_search:
-                extra += [
-                    StructField(n, arr, False)
-                    for n in ("s_start", "s_end", "s_id", "s_row")
-                ]
+            extra = [StructField(n, arr, False) for n in flat_cols]
             if with_text:
                 extra.append(StructField("text", StringType(), False))
-            out_schema = StructType(list(df.schema.fields) + extra)
-            df = df.mapInArrow(fn, out_schema)
-            if assembled:
-                df = df.withColumn(
-                    "filter_spans", assemble_spans("", kind="filter")
-                )
-                drop = ["f_start", "f_end", "f_id", "f_row"]
-                if with_search:
-                    df = df.withColumn(
-                        "search_spans", assemble_spans("", kind="search")
-                    )
-                    drop += ["s_start", "s_end", "s_id", "s_row"]
-                df = df.drop(*drop)
-        else:
-            # the pandas token-table UDF has no row dispatch: a
-            # dispatched workspace under arrow_path=False takes the
-            # generic extractor here
-            if use_tokens and kernel.kind == "word_table":
-                fused_udf = make_token_fused_extractor(
-                    self.vocab,
-                    filters,
-                    searches,
-                    include_search=with_search,
-                    # text skippable only on the token path: span offsets
-                    # come from the word-length table, no string needed
-                    include_text=with_text,
-                )
-            else:
-                if not with_text:
-                    # the generic extractor materializes text by nature;
-                    # honoring with_text=False silently would change the
-                    # sink schema depending on matcher shape
-                    raise ValueError(
-                        "with_text=False requires the word-table path: a "
-                        "dispatchable workspace, with token_tables and "
-                        f"arrow_path not disabled; here: {why} — the "
-                        "generic extractor always materializes text"
-                    )
-                fused_udf = make_fused_extractor(
-                    self.vocab, filters, searches, include_search=with_search,
-                    dialect=self.ws.regex_dialect,
-                )
-            df = df.withColumn("_flat", fused_udf(F.col("tokens")))
-            if with_text:
-                df = df.withColumn("text", F.col("_flat.text"))
+            df = df.mapInArrow(fn, StructType(list(df.schema.fields) + extra))
+            spans_from, drop = "", flat_cols
+        if assembled:
             df = df.withColumn(
-                "filter_spans", assemble_spans("_flat", kind="filter")
+                "filter_spans", assemble_spans(spans_from, kind="filter")
             )
             if with_search:
                 df = df.withColumn(
-                    "search_spans", assemble_spans("_flat", kind="search")
+                    "search_spans", assemble_spans(spans_from, kind="search")
                 )
-            df = df.drop("_flat")
-        flat = use_arrow and not assembled
-        if flat:
-            from txtlogparser_spark.operators.route import (
-                filter_predicate_flat,
-                route_tag_flat,
-            )
+            df = df.drop(*drop)
         if filters:
             df = df.where(
-                filter_predicate_flat(F.col("f_id"))
-                if flat
-                else filter_predicate(F.col("filter_spans"))
+                filter_predicate(F.col("filter_spans"))
+                if assembled
+                else filter_predicate_flat(F.col("f_id"))
             )
-        df = self.enriched(df, rank_basis=_rank_basis, selected=_sel)
+        df = self._enriched(df, scanned, selected)
         if filters:
             df = df.withColumn(
                 "route",
-                route_tag_flat(filters, F.col("f_id"))
-                if flat
-                else route_tag_column(filters, F.col("filter_spans")),
+                route_tag_column(filters, F.col("filter_spans"))
+                if assembled
+                else route_tag_flat(filters, F.col("f_id")),
             )
         else:
+            # no enabled filters ⇒ pass-through (OutputData.cpp:323-329)
             df = df.withColumn("route", F.lit(-1))
         return df
+
+    def _enriched(
+        self,
+        df: DataFrame,
+        scanned: DataFrame,
+        selected: Optional[Sequence[str]],
+    ) -> DataFrame:
+        """Broadcast enrich with source_rank/payload."""
+        if self.source_info is None:
+            # degenerate no-dim mode: rank sources lexicographically from a
+            # distributed K-row aggregate — no .collect() of the fact
+            # table, no unpartitioned window. The enrich runs after
+            # the survival filter, so the rank dim comes from the
+            # pre-filter `scanned` frame: a source whose rows all fail the
+            # filters still holds its rank slot.
+            from txtlogparser_spark.operators.windowing import (
+                ordered_partition_dim,
+            )
+
+            ranks = ordered_partition_dim(
+                scanned.select("source"), "source"
+            ).select("source", F.col("_rank").alias("source_rank"))
+            return df.join(F.broadcast(ranks), "source", "inner")
+        return enrich_with_sources(df, self.source_info, selected=selected)
 
     def display_text(self, df: DataFrame) -> DataFrame:
         """`text` for a (page-sized) slice — the render-on-demand analog

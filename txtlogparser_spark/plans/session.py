@@ -7,16 +7,17 @@ reference additionally loads each workspace's file list lazily on
 activation.
 
 Spark re-expression of "switching/filter mutation is cheap": the
-expensive filter-independent stage — scan + detokenize (the Python parse
-pass) — is computed ONCE and `persist()`ed; every workspace's
-route/aggregate plan is built ON TOP of that cached DataFrame, so a
-filter-only change (SURVEY.md §3.2) re-runs only the span/route stages
-over in-memory parsed rows, never the parse. This is the cached-
-intermediate analog of the reference keeping parsed OutputData lines in
+workspace-independent head of the plan, `plans.pipeline.scan` (the
+source-pruned token scan plus line_no), is computed ONCE and
+`persist()`ed. Each step runs the rest of `LogPipeline.run`,
+`LogPipeline.route` (token prefilter → span stage → survival → enrich →
+route), on that cached token frame, so a filter-only change (SURVEY.md
+§3.2) re-runs only the workspace's own stages, never the scan. This is
+the cached-intermediate analog of the reference keeping loaded lines in
 memory across filter mutations (OutputData.cpp:98-110 recompute).
 
 At 100 TB the cache level is `MEMORY_AND_DISK` spill-safe storage; for
-truly table-scale inputs, persist the parsed stage as a parquet/Iceberg
+truly table-scale inputs, persist the scanned stage as a parquet/Iceberg
 intermediate instead (write_sequences) and point sessions at it — the
 API is the same either way.
 """
@@ -32,12 +33,13 @@ from txtlogparser_spark.config import (
     WorkspaceConfig,
     save_workspaces,
 )
-from txtlogparser_spark.plans.pipeline import LogPipeline
+from txtlogparser_spark.operators.enrich import selected_sources
+from txtlogparser_spark.plans.pipeline import LogPipeline, scan
 
 
 class WorkspaceSession:
     """Holds N workspaces over ONE input; switching re-routes the cached
-    parsed stage instead of re-parsing."""
+    scanned stage instead of re-scanning."""
 
     def __init__(
         self,
@@ -70,26 +72,17 @@ class WorkspaceSession:
         }
         self.active_id: int = -1
         self._parsed: Optional[DataFrame] = None
+        self._selected: Optional[list] = None
         self._pipelines: Dict[int, LogPipeline] = {}
 
-    # ---- cached filter-independent parse stage ----
+    # ---- cached workspace-independent scan stage ----
     def parsed(self) -> DataFrame:
-        """Scan + detokenize, computed once per session (persisted;
-        spill-safe). Every workspace's routed plan builds on this."""
+        """`plans.pipeline.scan` of the input, computed once per session
+        (persisted; spill-safe). Every workspace's step routes it."""
         if self._parsed is None:
-            base = LogPipeline(
-                self.spark,
-                # parse is workspace-independent; any config works here
-                next(iter(self.workspaces.values())),
-                self.vocab,
-                source_info=self.source_info,
-                # without this, LogPipeline.__init__ re-validates the
-                # (arbitrary) first workspace under the default 'reject'
-                # and a match_nothing session with one reference-invalid
-                # regex anywhere could never even parse
-                invalid_regex=self.invalid_regex,
-            )
-            self._parsed = base.enriched(base.parsed(self.seqs)).persist(
+            if self.source_info is not None:
+                self._selected = selected_sources(self.source_info)
+            self._parsed = scan(self.seqs, self._selected).persist(
                 StorageLevel.MEMORY_AND_DISK
             )
         return self._parsed
@@ -98,7 +91,8 @@ class WorkspaceSession:
     def set_active(self, ws_id: int) -> LogPipeline:
         """Activate `ws_id` (no-op when already active), persist the store
         when configured (the reference saves on every switch), and return
-        the workspace's pipeline bound to the shared cached parse."""
+        the workspace's pipeline; `routed()` runs it on the shared
+        cached scan."""
         if ws_id not in self.workspaces:
             raise KeyError(f"unknown workspace id {ws_id}")
         if ws_id != self.active_id:
@@ -122,17 +116,18 @@ class WorkspaceSession:
         return self._pipelines[ws_id]
 
     def routed(self, *, with_search: bool = True) -> DataFrame:
-        """Route the CACHED parsed rows under the active workspace — the
-        cheap filter-only-change path (no re-parse, no second Python
-        detokenize pass)."""
+        """Route the CACHED scanned rows under the active workspace: the
+        rest of `LogPipeline.run`, so a step runs the same plan as a batch
+        run, with no re-scan."""
         if self.active_id == -1:
             raise RuntimeError("no active workspace (call set_active)")
-        return self.pipeline(self.active_id).routed(
-            self.parsed(), with_search=with_search
+        scanned = self.parsed()
+        return self.pipeline(self.active_id).route(
+            scanned, with_search=with_search, selected=self._selected
         )
 
     def update_workspace(self, ws: WorkspaceConfig) -> None:
-        """Replace a workspace config (filter mutation); the parsed cache
+        """Replace a workspace config (filter mutation); the scan cache
         is untouched — only the routed plan changes. Saves the store on
         ANY workspace mutation (reference save-on-mutation,
         WorkspaceManager.cpp:25-76 — the store holds every workspace, so

@@ -4,9 +4,9 @@ The reference recomputes on every file change (OutputData.cpp:98-110
 reloadFiles → full recompute). The streaming engine replaces recompute with
 incremental processing: `readStream` over the sequences table directory
 (file-arrival source; swap for Kafka/Iceberg incremental scan in
-production), the SAME stage functions as the batch plan (parse → enrich →
-route — stateless projections compose identically in streaming), and
-per-micro-batch sink + metrics writes via `foreachBatch`.
+production), the batch plan itself (`LogPipeline.run` on each micro-batch:
+per-row projections, filters and a broadcast join compose identically in
+streaming), and per-micro-batch sink + metrics writes via `foreachBatch`.
 
 Aggregates (A1-A3) are maintained incrementally: `foreachBatch` appends
 per-batch partial counts; the exact totals are a trivial sum at read time
@@ -28,7 +28,7 @@ from txtlogparser_spark.plans.pipeline import LogPipeline
 
 
 class StreamingLogPipeline:
-    """Streaming wrapper around a LogPipeline's stage functions."""
+    """Streaming wrapper around a LogPipeline's `run()`."""
 
     def __init__(self, pipe: LogPipeline) -> None:
         self.pipe = pipe
@@ -41,11 +41,9 @@ class StreamingLogPipeline:
         return reader.schema(schema).option("maxFilesPerTrigger", 8).parquet(path)
 
     def routed_stream(self, stream: DataFrame) -> DataFrame:
-        """Same declarative stages as batch — parse/enrich/route are
-        stateless, so the plan transfers verbatim."""
-        return self.pipe.routed(
-            self.pipe.enriched(self.pipe.parsed(stream)), with_search=True
-        )
+        """`LogPipeline.run` on the stream or one micro-batch of it: the
+        batch plan transfers verbatim."""
+        return self.pipe.run(stream)
 
     def start(
         self,
