@@ -27,7 +27,7 @@ proportional) so the small config cannot borrow idle cores for
 GC/Arrow/Python work.
 
 Each trial is ONE job: parse → route → per-filter metrics + routed-row
-count (operators.aggregate.one_pass_metrics) — one Python parse pass,
+count (operators.aggregate.one_pass_metrics_flat) — one Python parse pass,
 one tiny (filter_id, partial-sums) shuffle.
 
 Writes BENCH/BASELINE.md and prints one JSON line. If
@@ -174,7 +174,7 @@ winfo = spark.read.parquet(f"{{warm_data}}/source_info.parquet")
 wpipe = LogPipeline(spark, default_workspace(), vocab, source_info=winfo)
 wseqs = wpipe.load_sequences(f"{{warm_data}}/sequences")
 one_pass_metrics_flat(
-    wpipe.run(wseqs, with_text=False, assembled=False)
+    wpipe.run(wseqs, with_text=False)
 ).collect()
 
 def _cpu_stat():
@@ -191,7 +191,7 @@ for t in range({trials}):
     # lets Spark reuse the registered shuffle map outputs of the previous
     # job (same RDD lineage -> same shuffle id), which skips the entire
     # parse stage and destroys the measurement (observed: 0.09s "trials").
-    routed = pipe.run(seqs, with_text=False, assembled=False)
+    routed = pipe.run(seqs, with_text=False)
     # ONE job: parse -> route -> per-filter metrics + routed-row count;
     # shuffle carries only (filter_id, partial sums)
     m = {{r["filter_id"]: r for r in one_pass_metrics_flat(routed).collect()}}

@@ -98,7 +98,7 @@ def _routed(spark: SparkSession, sf_dir: str, with_search: bool = False) -> Data
     filters = ws.enabled_filters()
     searches = ws.enabled_searches() if with_search else []
     df = _docs(spark, sf_dir).where(
-        survival_prefilter(filters, F.col("text"), spark)
+        survival_prefilter(filters, F.col("text"))
     )
     df = attach_spans(df, "text", filters, searches, include_search=with_search)
     df = df.where(filter_predicate(F.col("filter_spans")))
@@ -458,7 +458,7 @@ def q_log_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters = ws.enabled_filters()
     searches = ws.enabled_searches()
     df = _docs(spark, sf_dir).where(
-        survival_prefilter(filters, F.col("text"), spark)
+        survival_prefilter(filters, F.col("text"))
     )
     df = attach_spans(
         df, "text", filters, searches, include_search=True, include_combined=True
@@ -536,8 +536,8 @@ def q_log_nav_prev(spark: SparkSession, sf_dir: str) -> DataFrame:
     last span of the nearest earlier matching line (the reference's
     reverse scan, OutputData.cpp:616-628), wrapping to the globally last
     span. Vectorized across all filters: priority class 2/1/0 +
-    max(struct) — ONE aggregation, the same lexicographic-struct shape as
-    operators/navigation.prev_match (pytest-pinned point query)."""
+    max(struct) — ONE aggregation, lexicographic struct comparison;
+    checked against its DuckDB oracle (tools/check_oracle.py)."""
     from txtlogparser_spark.operators.windowing import with_global_index
 
     routed = _routed(spark, sf_dir)
@@ -583,7 +583,8 @@ def q_log_nav_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop rows); for every search at cursor (output_index=5, char=3), the
     first span at (cursor line, start>=3), else the first span of the
     next matching line, wrapping to the globally first. Same class +
-    min(struct) shape as operators/navigation.next_match(by_search)."""
+    struct shape as log_nav_prev, with min(struct); checked against its
+    DuckDB oracle (tools/check_oracle.py)."""
     from txtlogparser_spark.operators.windowing import with_global_index
 
     routed = _routed(spark, sf_dir, with_search=True)

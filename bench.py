@@ -152,11 +152,11 @@ def run_pipeline_bench(spark) -> tuple[int, float]:
 
     # ONE pipeline execution: routed rows land in the sink; aggregates
     # read the (columnar, pruned) sink instead of recomputing the UDF.
-    # with_text=False + assembled=False is the at-scale sink shape: the
-    # per-row invariant is token-array equality, spans are stored as flat
-    # int-list columns (cheaper to encode, and a metrics read scans ONE
-    # narrow column), display text is detokenized per page on read.
-    routed = pipe.run(seqs, with_text=False, assembled=False)
+    # with_text=False: the per-row invariant is token-array equality,
+    # spans are stored as run()'s flat int-list columns (a metrics read
+    # scans ONE narrow column), display text is detokenized per page on
+    # read.
+    routed = pipe.run(seqs, with_text=False)
     routed.write.mode("overwrite").parquet(sink)
     routed_sink = spark.read.parquet(sink)
     n = routed_sink.count()

@@ -8,10 +8,13 @@ Checks per BASELINE.json:
 - first-match-wins span decomposition per line
 """
 
+import re
+
 import numpy as np
 import pytest
 
 from txtlogparser_spark.config import FilterSpec, WorkspaceConfig
+from txtlogparser_spark.functions.spans import assemble_spans
 from txtlogparser_spark.oracle import LineRec, run_pipeline
 from txtlogparser_spark.plans.pipeline import LogPipeline
 from txtlogparser_spark.sources.fixtures import (
@@ -64,6 +67,12 @@ def spark_routed(spark, fixture_dir):
     return pipe, routed.cache()
 
 
+def _span_cols(*kinds):
+    """run()'s flat span lists as the reference's span structs, one
+    `<kind>_spans` column per kind."""
+    return [assemble_spans("", kind=k).alias(f"{k}_spans") for k in kinds]
+
+
 def spans_tuples(span_rows):
     return [
         (s["start"], s["end"], s["filter_id"], s["search_id"]) for s in span_rows
@@ -93,7 +102,7 @@ class TestRoutedRows:
         _, routed = spark_routed
         got = {
             r["doc_id"]: spans_tuples(r["filter_spans"])
-            for r in routed.select("doc_id", "filter_spans").collect()
+            for r in routed.select("doc_id", *_span_cols("filter")).collect()
         }
         for ol in oracle_result.lines:
             want = [
@@ -193,7 +202,7 @@ class TestFusedPath:
         seqs = pipe.load_sequences(f"{fixture_dir}/sequences")
         key = lambda df: sorted(
             (r["doc_id"], r["route"], tuple(map(tuple, r["filter_spans"])))
-            for r in df.select("doc_id", "route", "filter_spans").collect()
+            for r in df.select("doc_id", "route", *_span_cols("filter")).collect()
         )
         want = key(pipe.run(seqs))
         assert [d for d, _, _ in want] == sorted(
@@ -278,7 +287,7 @@ class TestEcmaDialectE2E:
         )
         got = {
             r["doc_id"]: spans_tuples(r["filter_spans"])
-            for r in routed.select("doc_id", "filter_spans").collect()
+            for r in routed.select("doc_id", *_span_cols("filter")).collect()
         }
         sess.close()
         want = {
@@ -454,6 +463,57 @@ def _executed_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+class TestFlatSink:
+    """run() emits only the flat f_*/s_* span lists, the sink stores them
+    partitioned by route alone, and the counts read f_id / s_id alone."""
+
+    @pytest.mark.parametrize("compact", [False, True], ids=["plain", "compact"])
+    def test_sink_layout(self, spark, fixture_dir, tmp_path, compact):
+        import os
+
+        info = spark.read.parquet(f"{fixture_dir}/source_info.parquet")
+        pipe = LogPipeline(spark, default_workspace(), build_vocab(), source_info=info)
+        seqs = pipe.load_sequences(f"{fixture_dir}/sequences")
+        routed = pipe.run(seqs)
+        pipe.write_sinks(routed, str(tmp_path), compact=compact)
+        root = tmp_path / "routed"
+        dirs = sorted(d for d in os.listdir(root) if not d.startswith(("_", ".")))
+        n_routes = len(default_workspace().enabled_filters())
+        assert dirs and all(d.startswith("route=") for d in dirs), dirs
+        assert len(dirs) <= n_routes
+        files = [
+            os.path.join(d, f)
+            for d, subdirs, fs in os.walk(root)
+            for f in fs
+            if f.endswith(".parquet")
+        ]
+        assert not any("source=" in f for f in files), files
+        assert all(os.path.dirname(f) != str(root) for f in files)
+        if not compact:
+            assert len(files) <= n_routes * seqs.rdd.getNumPartitions(), len(files)
+        sink = spark.read.parquet(str(root))
+        flat = [f"{k}_{x}" for k in "fs" for x in ("start", "end", "id", "row")]
+        assert set(flat) <= set(sink.columns)
+        assert not {"filter_spans", "search_spans"} & set(sink.columns)
+        assert "source" in sink.columns
+        assert sink.count() == routed.count()
+
+    def test_no_struct_assembly_and_counts_read_ids_only(
+        self, spark, fixture_dir, tmp_path
+    ):
+        info = spark.read.parquet(f"{fixture_dir}/source_info.parquet")
+        pipe = LogPipeline(spark, default_workspace(), build_vocab(), source_info=info)
+        routed = pipe.run(pipe.load_sequences(f"{fixture_dir}/sequences"))
+        plan = _executed_plan(routed)
+        assert "arrays_zip" not in plan and "MapInArrow" in plan, plan
+        pipe.write_sinks(routed, str(tmp_path))
+        sink = spark.read.parquet(str(tmp_path / "routed"))
+        for counts, col in ((pipe.filter_counts, "f_id"), (pipe.search_counts, "s_id")):
+            plan = _executed_plan(counts(sink))
+            read = re.findall(r"ReadSchema: (struct<.*?>)(?:\n|,|$)", plan)
+            assert read == [f"struct<{col}:array<int>>"], plan
+
+
 def _display_page(pipe, sink):
     return pipe.display_text(
         sink.orderBy("source_rank", "line_no").limit(100)
@@ -540,7 +600,7 @@ class TestSpanDispatch:
         sink = spark.read.parquet(str(tmp_path / "routed"))
 
         got = sink.orderBy("source_rank", "line_no").select(
-            "doc_id", "filter_spans", "search_spans"
+            "doc_id", *_span_cols("filter", "search")
         ).collect()
         assert [r["doc_id"] for r in got] == [ol.rec.doc_id for ol in oracle.lines]
         for r, ol in zip(got, oracle.lines):
@@ -583,22 +643,31 @@ class TestSpanDispatch:
         seqs = pipe.load_sequences(f"{fixture_dir}/sequences")
         routed = pipe.run(seqs)
         plan = _executed_plan(routed)
-        assert "ArrowEvalPython" in plan and "MapInArrow" not in plan, plan
+        assert plan.count("ArrowEvalPython") == 1 and "MapInArrow" not in plan, plan
         oracle = run_pipeline(_fixture_lines(), ws)
         assert sorted(r["doc_id"] for r in routed.select("doc_id").collect()) == sorted(
             ol.rec.doc_id for ol in oracle.lines
         )
-        reason = pipe.span_kernel().reason
-        for kw in ({"assembled": False}, {"with_text": False}):
-            with pytest.raises(ValueError) as err:
-                pipe.run(seqs, **kw)
-            assert reason and reason in str(err.value)
+        assert pipe.span_kernel().reason
+        # with_text=False runs on the generic kernel too: same spans, no text
+        slim = pipe.run(seqs, with_text=False)
+        assert "text" not in slim.columns
+        assert slim.columns == [c for c in routed.columns if c != "text"]
+        got = {
+            r["doc_id"]: (spans_tuples(r["filter_spans"]), spans_tuples(r["search_spans"]))
+            for r in slim.select("doc_id", *_span_cols("filter", "search")).collect()
+        }
+        assert got == {
+            ol.rec.doc_id: tuple(
+                [(s.start, s.end, s.filter_id, s.search_id) for s in spans]
+                for spans in (ol.filter_spans, ol.search_spans)
+            )
+            for ol in oracle.lines
+        }
 
     def test_flags_accept_dispatchable_workspace(self, spark, fixture_dir):
-        """assembled=False and with_text=False run on a dispatchable
-        workspace; text is then built for scanner rows only."""
-        from txtlogparser_spark.operators.aggregate import filter_metrics_flat
-
+        """with_text=False runs on a dispatchable workspace; text is then
+        built for scanner rows only."""
         ws = _cross_word_ws(row=-1)
         oracle = run_pipeline(_fixture_lines(), ws)
         info = spark.read.parquet(f"{fixture_dir}/source_info.parquet")
@@ -606,14 +675,12 @@ class TestSpanDispatch:
         seqs = pipe.load_sequences(f"{fixture_dir}/sequences")
         want_rows = sorted(ol.rec.doc_id for ol in oracle.lines)
         slim = pipe.run(seqs, with_text=False)
-        assert "text" not in slim.columns
+        assert "text" not in slim.columns and "f_id" in slim.columns
         assert sorted(r["doc_id"] for r in slim.select("doc_id").collect()) == want_rows
-        flat = pipe.run(seqs, with_text=False, assembled=False)
-        assert "text" not in flat.columns and "filter_spans" not in flat.columns
-        assert "MapInArrow" in _executed_plan(flat)
+        assert "MapInArrow" in _executed_plan(slim)
         fm = {
             r["filter_id"]: (r["occurrence_count"], r["line_count"])
-            for r in filter_metrics_flat(flat).collect()
+            for r in pipe.filter_counts(slim).collect()
         }
         assert fm == {
             fid: (n, len(oracle.filter_line_map[fid]))

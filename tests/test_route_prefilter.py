@@ -19,7 +19,7 @@ from txtlogparser_spark.oracle import LineRec, run_pipeline
 
 def _kept(spark, filters, texts):
     df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
-    pre = survival_prefilter(filters, F.col("text"), spark)
+    pre = survival_prefilter(filters, F.col("text"))
     return {r["i"] for r in df.where(pre).select("i").collect()}
 
 

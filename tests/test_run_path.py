@@ -10,6 +10,7 @@ import sys
 import pytest
 
 from txtlogparser_spark.config import FilterSpec, SearchSpec, WorkspaceConfig
+from txtlogparser_spark.functions.spans import assemble_spans
 from txtlogparser_spark.oracle import LineRec, run_pipeline
 from txtlogparser_spark.plans.pipeline import LogPipeline
 from txtlogparser_spark.plans.session import WorkspaceSession
@@ -57,13 +58,20 @@ def _oracle(ws=WS, vocab=VOCAB, lines=LINES):
     }
 
 
+def _span_cols():
+    """run()'s flat span lists as the reference's span structs."""
+    return [
+        assemble_spans("", kind=k).alias(f"{k}_spans") for k in ("filter", "search")
+    ]
+
+
 def _spans(routed):
     def tup(spans):
         return [(s["start"], s["end"], s["filter_id"], s["search_id"]) for s in spans]
 
     return {
         r["doc_id"]: (tup(r["filter_spans"]), tup(r["search_spans"]))
-        for r in routed.select("doc_id", "filter_spans", "search_spans").collect()
+        for r in routed.select("doc_id", *_span_cols()).collect()
     }
 
 
@@ -151,7 +159,7 @@ def test_carriage_return_vocab_same_on_every_path(spark):
     )
     seqs = _seqs(spark, vocab, lines)
     pipe = LogPipeline(spark, ws, vocab)
-    cols = ["doc_id", "text", "filter_spans", "search_spans", "route"]
+    cols = ["doc_id", "text", *_span_cols(), "route"]
 
     def rows(df):
         return sorted(tuple(r) for r in df.select(cols).collect())

@@ -12,6 +12,7 @@ import pytest
 
 from txtlogparser_spark.config import FilterSpec, SearchSpec, WorkspaceConfig
 from txtlogparser_spark.functions.detokenize import make_detokenizer
+from txtlogparser_spark.functions.spans import assemble_spans
 from txtlogparser_spark.oracle import LineRec, run_pipeline
 from txtlogparser_spark.oracle.matcher import scrub_line
 from txtlogparser_spark.sources.textlog import (
@@ -175,7 +176,11 @@ def test_ingest_pipeline_matches_oracle_on_raw_lines(spark, log_file):
 
     seqs, vdf = ingest_log(spark, log_file, source="app")
     pipe = LogPipeline(spark, ws, _vocab_list(vdf))
-    routed = pipe.run(seqs, with_search=True).collect()
+    routed = (
+        pipe.run(seqs, with_search=True)
+        .select("doc_id", "text", assemble_spans("", kind="filter").alias("filter_spans"))
+        .collect()
+    )
 
     scrubbed = expected_scrubbed()
     recs = [

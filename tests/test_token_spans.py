@@ -14,7 +14,11 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from txtlogparser_spark.config import FilterSpec, SearchSpec
-from txtlogparser_spark.functions.spans import _matcher_table, extract_line_spans
+from txtlogparser_spark.functions.spans import (
+    _matcher_table,
+    assemble_spans,
+    extract_line_spans,
+)
 from txtlogparser_spark.functions.token_spans import (
     build_word_tables,
     matchers_word_local,
@@ -367,8 +371,9 @@ def test_gate_admitted_random_asts_are_word_local(pat, data):
 
 
 def test_pipeline_paths_agree(spark, tmp_path):
-    """Spark-level: every sink shape of `run()` (structs + text, no text,
-    flat) equals the oracle on fixture data with empty rows."""
+    """Spark-level: `run()` with and without text equals the oracle on
+    fixture data with empty rows, and the flat counts equal the struct
+    counts the driver's text queries use."""
     from txtlogparser_spark.oracle import LineRec, run_pipeline
     from txtlogparser_spark.plans.pipeline import LogPipeline
     from txtlogparser_spark.sources.fixtures import (
@@ -407,7 +412,13 @@ def test_pipeline_paths_agree(spark, tmp_path):
     def spans(rows):
         return [(s["start"], s["end"], s["filter_id"], s["search_id"]) for s in rows]
 
-    cols = ["doc_id", "text", "filter_spans", "search_spans", "route"]
+    cols = [
+        "doc_id",
+        "text",
+        assemble_spans("", kind="filter").alias("filter_spans"),
+        assemble_spans("", kind="search").alias("search_spans"),
+        "route",
+    ]
     full = {r["doc_id"]: r for r in pipe.run(seqs).select(cols).collect()}
     order = {f.id: f.row for f in ws.enabled_filters()}
     assert set(full) == {ol.rec.doc_id for ol in oracle.lines}
@@ -428,47 +439,36 @@ def test_pipeline_paths_agree(spark, tmp_path):
     }
     assert redone == full
 
-    # flat sink shape (assembled=False): same survival/routes, and the
-    # flat metrics equal the assembled metrics and the oracle's counts
-    from txtlogparser_spark.operators.aggregate import (
-        filter_metrics,
-        filter_metrics_flat,
-        search_metrics,
-        search_metrics_flat,
-    )
+    # the flat counts (filter_counts/search_counts) equal the struct
+    # metrics over the assembled spans and the oracle's counts
+    from txtlogparser_spark.operators.aggregate import filter_metrics, search_metrics
 
-    flat = pipe.run(seqs, with_text=False, assembled=False)
-    assert "filter_spans" not in flat.columns and "f_id" in flat.columns
-    routes_flat = sorted(
-        (r["doc_id"], r["route"]) for r in flat.select("doc_id", "route").collect()
-    )
-    assert routes_flat == sorted((k, r["route"]) for k, r in full.items())
+    assert "filter_spans" not in slim.columns and "f_id" in slim.columns
+    structs = slim.select(*cols[2:4])
 
     def counts(df, key):
         return {
             r[key]: (r["occurrence_count"], r["line_count"]) for r in df.collect()
         }
 
-    fm = counts(filter_metrics(slim), "filter_id")
-    assert fm == counts(filter_metrics_flat(flat), "filter_id")
+    fm = counts(pipe.filter_counts(slim), "filter_id")
+    assert fm == counts(filter_metrics(structs), "filter_id")
     assert fm == {
         fid: (n, len(oracle.filter_line_map[fid]))
         for fid, n in oracle.filter_match_count.items()
     }
-    sm = counts(search_metrics(slim), "search_id")
-    assert sm == counts(search_metrics_flat(flat), "search_id")
+    sm = counts(pipe.search_counts(slim), "search_id")
+    assert sm == counts(search_metrics(structs), "search_id")
     assert sm == {
         sid: (n, len(oracle.search_line_map[sid]))
         for sid, n in oracle.search_match_count.items()
     }
 
 
-def test_generic_workspace_flags_raise_with_reason(spark, tmp_path):
+def test_generic_workspace_without_text_matches_oracle(spark, tmp_path):
     """A phrase matcher has no space-free literal, so the workspace runs
-    the generic kernel: `run()` matches the oracle there, and the flags
-    only the mapInArrow kernel can honor raise, naming the reason."""
-    import pytest as _pytest
-
+    the generic kernel: `run()` matches the oracle there, with and
+    without text, and emits the mapInArrow kernel's flat span columns."""
     from txtlogparser_spark.config import FilterSpec, WorkspaceConfig
     from txtlogparser_spark.oracle import LineRec, run_pipeline
     from txtlogparser_spark.plans.pipeline import LogPipeline
@@ -496,19 +496,33 @@ def test_generic_workspace_flags_raise_with_reason(spark, tmp_path):
     kernel = pipe.span_kernel(with_search=False)
     assert kernel.kind == "generic" and kernel.reason
     seqs = pipe.load_sequences(f"{out}/sequences")
-    for kw in ({"with_text": False}, {"assembled": False}):
-        with _pytest.raises(ValueError) as err:
-            pipe.run(seqs, with_search=False, **kw)
-        assert kernel.reason in str(err.value)
-    got = sorted(
-        r["doc_id"] for r in pipe.run(seqs, with_search=False).select("doc_id").collect()
-    )
     lines = [
         LineRec(r["doc_id"], r["source"], 0, 0, " ".join(vocab[t] for t in r["tokens"]))
         for r in rows
     ]
-    assert got == sorted(ol.rec.doc_id for ol in run_pipeline(lines, ws).lines)
-    assert got
+    want = {
+        ol.rec.doc_id: [(s.start, s.end, s.filter_id) for s in ol.filter_spans]
+        for ol in run_pipeline(lines, ws).lines
+    }
+    assert want
+    full = pipe.run(seqs, with_search=False)
+    slim = pipe.run(seqs, with_search=False, with_text=False)
+    # one schema on both kernels
+    word_local = WorkspaceConfig(id=2, name="v", filters=[FilterSpec(201, 0, vocab[5])])
+    assert LogPipeline(spark, word_local, vocab).span_kernel().kind != "generic"
+    assert full.columns == LogPipeline(spark, word_local, vocab).run(
+        seqs, with_search=False
+    ).columns
+    assert {"f_start", "f_end", "f_id", "f_row", "text"} <= set(full.columns)
+    assert slim.columns == [c for c in full.columns if c != "text"]
+    for df in (full, slim):
+        got = {
+            r["doc_id"]: [(s["start"], s["end"], s["filter_id"]) for s in r["sp"]]
+            for r in df.select(
+                "doc_id", assemble_spans("", kind="filter").alias("sp")
+            ).collect()
+        }
+        assert got == want
 
 
 def test_empty_rows_through_spark_and_arrow_paths(spark):

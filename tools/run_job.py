@@ -7,7 +7,7 @@ Launch from the repository root (multi-executor layout, or local[N]):
         tools/run_job.py --data .bench_data/seq_2000000 --out /tmp/run_out
 
 Runs parse → enrich → route → aggregate over the sequences table, writes
-the routed sink (partitioned by route, source), the per-filter/search
+the routed sink (partitioned by route, flat span columns), the per-filter/search
 metrics tables, and a run manifest; prints a one-line JSON summary that
 also names the span kernel that ran, and why (LogPipeline.span_kernel).
 No repo imports besides the shipped --py-files zip: this file must stay
@@ -105,12 +105,12 @@ def main() -> None:
     # carries the total) instead of a count() pass plus a metrics pass
     from txtlogparser_spark.operators.aggregate import (
         ALL_ROWS_SENTINEL,
-        one_pass_metrics,
+        one_pass_metrics_flat,
     )
 
     import pyspark.sql.functions as F
 
-    m = one_pass_metrics(sink).persist()
+    m = one_pass_metrics_flat(sink).persist()
     srow = m.where(F.col("filter_id") == ALL_ROWS_SENTINEL).select("line_count").collect()
     n = int(srow[0][0]) if srow else 0
     fc = m.where(F.col("filter_id") != ALL_ROWS_SENTINEL)

@@ -149,7 +149,7 @@ def main() -> None:
 
         def run_pipe():
             seqs = pipe.load_sequences(f"{seq_dir}/sequences")
-            routed = pipe.run(seqs, with_text=False, assembled=False)
+            routed = pipe.run(seqs, with_text=False)
             routed.write.format("noop").mode("overwrite").save()
 
         results.append(

@@ -94,17 +94,11 @@ def search_metrics(annotated: DataFrame, spans_col: str = "search_spans") -> Dat
     return _metrics(annotated, spans_col, "search_id", "search_id", False)
 
 
-def one_pass_metrics(routed: DataFrame, spans_col: str = "filter_spans") -> DataFrame:
-    """filter_metrics + total routed-row count in ONE job: every row
-    additionally emits sentinel pairs, so the result row with
-    filter_id == ALL_ROWS_SENTINEL carries rows_routed in both counts."""
-    return _metrics(routed, spans_col, "filter_id", "filter_id", True)
-
-
-# ---- flat-sink variants: operate on the unassembled f_id/s_id arrays
-# (one int per span, -1 = unclaimed). The sink stores these as plain
-# list<int32> columns, so a metrics read scans ONE narrow column instead
-# of decoding the full list<struct> span column.
+# ---- flat variants, what LogPipeline.filter_counts / search_counts run:
+# they operate on the f_id/s_id arrays `run()` emits (one int per span,
+# -1 = unclaimed). The sink stores these as plain list<int32> columns, so
+# a metrics read scans ONE narrow column. The struct variants above serve
+# the driver's text queries, which assemble span structs.
 
 
 def _metrics_flat(df: DataFrame, ids_col: str, out_id: str, sentinel: bool) -> DataFrame:
@@ -129,4 +123,7 @@ def search_metrics_flat(annotated: DataFrame, ids_col: str = "s_id") -> DataFram
 
 
 def one_pass_metrics_flat(routed: DataFrame, ids_col: str = "f_id") -> DataFrame:
+    """filter metrics + total routed-row count in ONE job: every row
+    additionally emits sentinel pairs, so the result row with
+    filter_id == ALL_ROWS_SENTINEL carries rows_routed in both counts."""
     return _metrics_flat(routed, ids_col, "filter_id", True)

@@ -13,9 +13,11 @@ The reference's row-survival rule is OR-semantics over enabled filters
    \\s and case folding; `.` stops at U+2028), so it would drop rows.
    At 10^12-row scale this prunes the bulk of the data before the Python
    stage.
-2. the exact span UDF (functions/spans.py) + `exists(filter_spans,
-   s -> s.filter_id != -1)` — the precise survival decision, JVM-side over
-   the UDF output.
+2. the exact span stage + `exists(f_id, x -> x != -1)` over its flat
+   span ids (`filter_predicate_flat`, what `LogPipeline.run` uses) or
+   `exists(filter_spans, s -> s.filter_id != -1)` over assembled span
+   structs (`filter_predicate`, the driver's text queries) — the precise
+   survival decision, JVM-side over the span output.
 
 Route tags (BASELINE.json: "Spark SQL CASE routing"): each row gets the id
 of the FIRST (lowest `row`) filter that claimed a span on it, so per-route
@@ -30,7 +32,7 @@ import re
 from typing import Optional, Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column
 
 from txtlogparser_spark.config import FilterSpec
 from txtlogparser_spark.functions.spans import _required_literals
@@ -75,12 +77,10 @@ def _necessary_condition(f: FilterSpec, text_col: Column) -> Column:
 def survival_prefilter(
     filters: Sequence[FilterSpec],
     text_col: Column,
-    spark: Optional[SparkSession] = None,
 ) -> Column:
     """OR of per-filter necessary conditions; `lit(True)` when no filters
     are enabled (pass-through semantics, OutputData.cpp:323-329). Python
-    dialect. `spark` is accepted for existing callers; the condition
-    needs no JVM-side check."""
+    dialect."""
     enabled = [f for f in filters if f.enabled]
     if not enabled:
         return F.lit(True)

@@ -23,12 +23,21 @@ workspace:
                                                scanner in the same batch
         generic (otherwise, incl. ecmascript): fused detokenize + generic
                                                text scanner (spans.py)
-    → exact survival filter (JVM exists())     # OR-semantics
+    → exact survival filter (JVM exists())     # OR-semantics, on f_id
     → broadcast enrich (source_rank, payload)  # no fact-table shuffle
-    → route tag (CASE)                         # single pass, per-sink writes
-  aggregates (partial+final hash agg)          # only (id, count) shuffles
+    → route tag (CASE over f_id)               # single pass, per-route sink
+  sink: partitionBy(route)                     # one file per route per task
+  aggregates over f_id / s_id                  # only (id, count) shuffles
   display page: top-N by (source_rank, line_no) # one TakeOrderedAndProject
                                                # when the sink stores text
+
+Spans are carried in ONE shape everywhere: the flat int-list columns
+f_start/f_end/f_id/f_row (and s_* when searches are on), one entry per
+span, -1 for an unclaimed id. Both kernels emit them, the sink stores
+them, and the aggregates read f_id/s_id alone. The reference's span
+structs are a read-side view: `functions/spans.py::assemble_spans("",
+kind=...)` rebuilds them from the flat columns of any routed frame or
+sink.
 
 One divergence from the reference, kept deliberately: its \\r line scrub
 (OutputData.cpp:78-90). Spans are computed on, and `text` stores, the line
@@ -62,19 +71,17 @@ from txtlogparser_spark.functions.detokenize import (
     has_carriage_return,
     make_detokenizer,
 )
-from txtlogparser_spark.functions.spans import assemble_spans, make_fused_extractor
+from txtlogparser_spark.functions.spans import make_fused_extractor
 from txtlogparser_spark.functions.token_prefilter import token_survival_prefilter
-from txtlogparser_spark.operators.aggregate import filter_metrics, search_metrics
+from txtlogparser_spark.operators.aggregate import (
+    filter_metrics_flat,
+    search_metrics_flat,
+)
 from txtlogparser_spark.operators.enrich import (
     enrich_with_sources,
     selected_sources,
 )
-from txtlogparser_spark.operators.route import (
-    filter_predicate,
-    filter_predicate_flat,
-    route_tag_column,
-    route_tag_flat,
-)
+from txtlogparser_spark.operators.route import filter_predicate_flat, route_tag_flat
 
 
 def scan(seqs: DataFrame, selected: Optional[Sequence[str]] = None) -> DataFrame:
@@ -130,10 +137,10 @@ class LogPipeline:
 
     # ---- aggregates (A1-A3) ----
     def filter_counts(self, routed: DataFrame) -> DataFrame:
-        return filter_metrics(routed)
+        return filter_metrics_flat(routed)
 
     def search_counts(self, routed: DataFrame) -> DataFrame:
-        return search_metrics(routed)
+        return search_metrics_flat(routed)
 
     # ---- the plan ----
     def span_kernel(self, *, with_search: bool = True) -> SpanKernel:
@@ -151,7 +158,6 @@ class LogPipeline:
         *,
         with_search: bool = True,
         with_text: bool = True,
-        assembled: bool = True,
     ) -> DataFrame:
         """The full plan, `route(scan(seqs))` (see the module docstring)."""
         selected = (
@@ -164,7 +170,6 @@ class LogPipeline:
             selected=selected,
             with_search=with_search,
             with_text=with_text,
-            assembled=assembled,
         )
 
     def route(
@@ -173,7 +178,6 @@ class LogPipeline:
         *,
         with_search: bool = True,
         with_text: bool = True,
-        assembled: bool = True,
         selected: Optional[Sequence[str]] = None,
     ) -> DataFrame:
         """The workspace part of `run()`, over a frame `scan()` built with
@@ -193,22 +197,10 @@ class LogPipeline:
         the fused detokenize + text scanner UDF (functions/spans.py) on
         every row.
 
-        `with_text=False` leaves out `text`; `assembled=False` keeps the
-        flat f_*/s_* int-list columns instead of the filter_spans /
-        search_spans structs. Both need the mapInArrow kernel, and raise
-        ValueError on a generic workspace."""
+        Both kernels emit the same columns: the scanned ones, the flat
+        f_*/s_* span lists and, unless `with_text=False`, `text`."""
         filters = self.ws.enabled_filters()
         searches = self.ws.enabled_searches() if with_search else []
-        kernel = self.span_kernel(with_search=with_search)
-        if kernel.kind == "generic" and not (with_text and assembled):
-            # the generic extractor always materializes text and emits no
-            # flat sink columns; honoring either flag silently would change
-            # the sink schema depending on matcher shape
-            raise ValueError(
-                "with_text=False and assembled=False need the mapInArrow "
-                f"kernel; this workspace runs the generic one: {kernel.reason}"
-            )
-
         df = scanned
         tok_pre = token_survival_prefilter(
             filters, self.vocab, dialect=self.ws.regex_dialect
@@ -218,17 +210,18 @@ class LogPipeline:
         flat_cols = ["f_start", "f_end", "f_id", "f_row"]
         if with_search:
             flat_cols += ["s_start", "s_end", "s_id", "s_row"]
-        if kernel.kind == "generic":
+        if self.span_kernel(with_search=with_search).kind == "generic":
             fused_udf = make_fused_extractor(
                 self.vocab, filters, searches, include_search=with_search,
                 dialect=self.ws.regex_dialect,
             )
+            out = flat_cols + (["text"] if with_text else [])
             df = df.withColumn("_flat", fused_udf(F.col("tokens")))
-            df = df.withColumn("text", F.col("_flat.text"))
-            spans_from, drop = "_flat", ["_flat"]
+            df = df.select(
+                "*", *[F.col(f"_flat.{c}").alias(c) for c in out]
+            ).drop("_flat")
         else:
-            # zero-copy batch path: flat span columns appended by
-            # mapInArrow, structs assembled JVM-side from top level
+            # zero-copy batch path: flat span columns appended by mapInArrow
             fn, _ = make_arrow_span_mapper(
                 self.vocab,
                 filters,
@@ -241,30 +234,11 @@ class LogPipeline:
             if with_text:
                 extra.append(StructField("text", StringType(), False))
             df = df.mapInArrow(fn, StructType(list(df.schema.fields) + extra))
-            spans_from, drop = "", flat_cols
-        if assembled:
-            df = df.withColumn(
-                "filter_spans", assemble_spans(spans_from, kind="filter")
-            )
-            if with_search:
-                df = df.withColumn(
-                    "search_spans", assemble_spans(spans_from, kind="search")
-                )
-            df = df.drop(*drop)
         if filters:
-            df = df.where(
-                filter_predicate(F.col("filter_spans"))
-                if assembled
-                else filter_predicate_flat(F.col("f_id"))
-            )
+            df = df.where(filter_predicate_flat(F.col("f_id")))
         df = self._enriched(df, scanned, selected)
         if filters:
-            df = df.withColumn(
-                "route",
-                route_tag_column(filters, F.col("filter_spans"))
-                if assembled
-                else route_tag_flat(filters, F.col("f_id")),
-            )
+            df = df.withColumn("route", route_tag_flat(filters, F.col("f_id")))
         else:
             # no enabled filters ⇒ pass-through (OutputData.cpp:323-329)
             df = df.withColumn("route", F.lit(-1))
@@ -315,26 +289,31 @@ class LogPipeline:
         """Fan-out: ONE pass writes every route's sink via partitioned write
         (no per-filter re-scan); per-row invariant columns ride along.
 
+        The sink is partitioned by `route` alone, one `route=<id>`
+        directory per route, and stores `run()`'s columns: the flat
+        f_*/s_* span lists, not span structs. Nothing reads a sink by
+        source (S2 source pruning acts on the input table), and a
+        `(route, source)` layout multiplies the files a write opens and
+        the counts re-read by the number of sources.
+
         compact=True routes the write through sources/compact.py
-        (AQE REBALANCE keyed by the sink partitions + doc_id
-        sortWithinPartitions): at production partition counts the plain
-        write sprays one file per task per (route, source) — compaction
-        collapses that to advisory-sized files with selective row-group
-        stats, at the cost of one extra exchange."""
+        (AQE REBALANCE keyed by route + doc_id sortWithinPartitions): at
+        production partition counts the plain write sprays one file per
+        task per route — compaction collapses that to advisory-sized
+        files with selective row-group stats, at the cost of one extra
+        exchange."""
         if compact:
             from txtlogparser_spark.sources.compact import write_compacted
 
             write_compacted(
                 routed,
                 f"{out_dir}/routed",
-                partition_by=["route", "source"],
+                partition_by=["route"],
                 sort_within=["doc_id"],
             )
             return
-        (
-            routed.write.mode("overwrite")
-            .partitionBy("route", "source")
-            .parquet(f"{out_dir}/routed")
+        routed.write.mode("overwrite").partitionBy("route").parquet(
+            f"{out_dir}/routed"
         )
 
     def write_sharded(

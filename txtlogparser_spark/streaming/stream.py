@@ -95,8 +95,7 @@ class StreamingLogPipeline:
             routed = self.routed_stream(batch_df).persist()
             try:
                 (
-                    routed.drop("filter_spans", "search_spans")
-                    .withColumn("batch_id", F.lit(batch_id))
+                    routed.withColumn("batch_id", F.lit(batch_id))
                     .write.mode("overwrite")
                     .option("partitionOverwriteMode", "dynamic")
                     .partitionBy("batch_id")
